@@ -1,9 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions._
-import graft.functions.{CentroidSet, NearestCentroid}
+import graft.functions.{CentroidSet, NearestCentroid, VecUtil}
 import org.apache.spark.sql.graftbridge.SqlBridge
 
 /** IVF (inverted-file) approximate-nearest-neighbor index — the
@@ -22,9 +23,11 @@ import org.apache.spark.sql.graftbridge.SqlBridge
   *    (the on-disk index; Program.cs:231-244's SerializeGraph);
   *  - load: plain parquet read of the partitioned layout
   *    (Program.cs:246-263's DeserializeGraph);
-  *  - search: probe the nprobe nearest centroids, then exact-rerank only
-  *    within probed partitions — partition pruning turns the 100 TB scan
-  *    into an nprobe/k fraction of it.
+  *  - search: rank the centroids against the query on the driver
+  *    ([[probeCells]]: one k-row collect, run when `search` is called),
+  *    then exact-rerank only the postings under the nprobe nearest —
+  *    a literal `centroid_id IN (...)` filter, so static partition
+  *    pruning turns the 100 TB scan into an nprobe/k fraction of it.
   *
   * Centroid selection is deterministic (every `step`-th vector) so the
   * whole pipeline is oracle-checkable; swapping in Lloyd-iteration
@@ -346,27 +349,87 @@ object Ivf {
 
   /** ANN search: probe the `nprobe` nearest centroids to the query, exact
     * dot-product rerank within probed buckets only. `query` is a 1-row
-    * frame with column `qv`. */
+    * frame with column `qv`. The probe ([[probeCells]]) runs on the
+    * driver when `search` is called — one job collecting the centroid
+    * table — and the returned plan reads only the probed cells:
+    * `centroid_id IN (...)` over literal ids, static partition pruning
+    * on a [[load]]ed index. */
   def search(postings: DataFrame, cents: DataFrame, query: DataFrame,
-             nprobe: Int, k: Int): DataFrame = {
-    // Unified dirty-centroid rule (see [[Pq.cleanCentroid]]): null /
-    // off-dim / null-element / NaN-element stride rows never probe —
-    // the same guard every PQ probe path applies (r7/r8 advice: the
-    // probe paths had diverged on dirty inputs). The query vector's
-    // own size witnesses the expected dimension.
-    val probed = cents.crossJoin(broadcast(query))
-      .where(Pq.cleanCentroid(col("c_emb"), size(col("qv"))))
-      .select(col("centroid_id"), round(l2Sq(col("c_emb"), col("qv")), 6).as("cdist"))
-      .orderBy(col("cdist"), col("centroid_id"))
-      .limit(nprobe)
-      .select("centroid_id")
+             nprobe: Int, k: Int): DataFrame =
+    searchProbed(postings, cents, query, _ => nprobe, k)
+
+  private def searchProbed(postings: DataFrame, cents: DataFrame, query: DataFrame,
+                           nprobe: Long => Int, k: Int): DataFrame = {
+    val (qv, q) = collectQv(query)
+    // Over [[inlinePostings]] the filter is pushed below the Project
+    // that computes centroid_id; the select below keeps no centroid_id,
+    // so column pruning drops the Project's copy and the argmin still
+    // runs once per row (PlanSpec guards this).
     postings
-      .join(broadcast(probed), "centroid_id")
-      .crossJoin(broadcast(query))
-      .select(col("vec_id"),
-        round(dot(col("embedding"), col("qv")), 6).as("score"))
+      .where(col("centroid_id").isin(probeCells(cents, q, nprobe): _*))
+      .select(col("vec_id"), round(dot(col("embedding"), qv), 6).as("score"))
       .orderBy(desc("score"), asc("vec_id"))
       .limit(k)
+  }
+
+  /** A query frame's `qv`, collected on the driver (a literal frame
+    * collects without a job): as a literal of the frame's own type —
+    * null elements kept, so scoring against it is bit-identical to
+    * scoring against the frame — and widened to doubles for
+    * [[probeCells]]. An empty frame or a null vector gives a null
+    * literal and no vector, so nothing is probed. */
+  private[graft] def collectQv(query: DataFrame): (Column, Option[Array[Double]]) = {
+    val qf = query.select(col("qv"))
+    val v = qf.collect() match {
+      case Array() => null
+      case Array(row) => row.get(0)
+      case rows => throw new IllegalArgumentException(
+        s"query must be at most 1 row, got ${rows.length}")
+    }
+    (SqlBridge.column(Literal.create(v, qf.schema.head.dataType)),
+      Option(v).map(_.asInstanceOf[scala.collection.Seq[Any]].map(Pq.widen).toArray))
+  }
+
+  /** The cells a single-query search probes: the `nprobe` centroids
+    * nearest `q`, ranked on the driver — shared by [[search]],
+    * [[Pq.searchAdcCells]] and [[Nsw.search]]/[[Nsw.searchFiltered]].
+    * One job collects the centroid table (k rows), and callers filter
+    * by the returned literal ids, which the planner prunes statically.
+    * (A probe subquery would leave pruning to DPP, which does not fire
+    * for a literal query frame, so every cell would be read.)
+    *
+    * The ranking is the Spark expression's, bit for bit:
+    * `round(l2sq(c_emb, qv), 6)` — (c − q)² summed left to right in
+    * double, then round6 — ordered by (cdist, centroid_id) with NaN
+    * last and null ids first. Only [[Pq.cleanCentroid]] rows of the
+    * query's own dimension rank; a null-id row takes its slot but
+    * probes nothing (it never joined). Null query elements arrive as
+    * NaN, so every cdist ties and cells go in id order, as Spark's
+    * all-null cdist did. `q = None` (null query) probes nothing.
+    * `nprobe` maps the table's row count — dirty and null-id rows
+    * included, what `cents.count()` returns — to the probe budget. */
+  private[graft] def probeCells(cents: DataFrame, q: Option[Array[Double]],
+                                nprobe: Long => Int): Seq[Long] = {
+    val rows = cents.select(col("centroid_id").cast("long"), col("c_emb")).collect()
+    val budget = nprobe(rows.length.toLong)
+    q.toSeq.flatMap { qv =>
+      rows.iterator
+        .filter(!_.isNullAt(1))
+        .map(r => (Option.unless(r.isNullAt(0))(r.getLong(0)),
+          r.getSeq[Any](1).map(Pq.widen).toArray))
+        .filter { case (_, ce) => ce.length == qv.length && !ce.exists(_.isNaN) }
+        .map { case (id, ce) =>
+          var acc = 0.0
+          var i = 0
+          while (i < ce.length) { val d = ce(i) - qv(i); acc += d * d; i += 1 }
+          // Spark's round passes NaN and ±Infinity through unchanged
+          (if (acc.isNaN || acc.isInfinite) acc else VecUtil.round6(acc), id)
+        }
+        .toSeq
+        .sorted(Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Option[Long]))
+        .take(budget)
+        .flatMap(_._2)
+    }
   }
 
   /** Batched ANN search: many query vectors at once — the cluster
@@ -437,10 +500,10 @@ object Ivf {
   /** Narrow inline postings (no persist): assignment rides the scan —
     * the only exchange a search over these adds is its final top-k.
     * The coalesce makes the join key non-nullable so a probed-centroid
-    * inner join does NOT insert an isnotnull Filter that would
-    * re-evaluate the whole argmin a second time per row (-1 matches no
-    * probed centroid, so unassignable rows drop exactly as the null
-    * would). */
+    * inner join ([[searchBatch]]) does NOT insert an isnotnull Filter
+    * that would re-evaluate the whole argmin a second time per row (-1
+    * matches no probed centroid, so unassignable rows drop exactly as
+    * the null would). */
   private[operators] def inlinePostings(vectors: DataFrame, cents: DataFrame): DataFrame =
     vectors.select(col("vec_id"), col("embedding"),
       coalesce(nearest(vectors, collectCentroids(cents)).getField("centroid_id"), lit(-1L))
@@ -548,11 +611,12 @@ object Ivf {
   def autoNProbe(cells: Long): Int =
     math.max(1, math.ceil(math.sqrt(cells.toDouble)).toInt)
 
-  /** [[search]] with the [[autoNProbe]] √-rule default (cell count read
-    * from the centroid table — k rows, a metadata-cheap count). */
+  /** [[search]] with the [[autoNProbe]] √-rule default. The cell count
+    * is the centroid table's row count, dirty rows included, taken from
+    * the rows [[probeCells]] collects — no separate count job. */
   def search(postings: DataFrame, cents: DataFrame, query: DataFrame,
              k: Int): DataFrame =
-    search(postings, cents, query, autoNProbe(cents.count()), k)
+    searchProbed(postings, cents, query, autoNProbe, k)
 
   /** [[searchBatch]] with the [[autoNProbe]] √-rule default. */
   def searchBatch(postings: DataFrame, cents: DataFrame, queries: DataFrame,
@@ -563,8 +627,7 @@ object Ivf {
   def searchInline(vectors: DataFrame, step: Int, query: DataFrame,
                    k: Int): DataFrame = {
     val cents = centroids(vectors, step)
-    search(inlinePostings(vectors, cents), cents, query,
-      autoNProbe(cents.count()), k)
+    search(inlinePostings(vectors, cents), cents, query, k)
   }
 
   /** Cell-split rebalance (q69) — the ACTION the [[cellBalance]] (q63)

@@ -313,12 +313,12 @@ object Nsw {
   }
 
   /** ANN search over a built graph: route to the `nprobe` nearest
-    * cells (same centroid rule as [[Ivf.search]]), beam-walk each
-    * cell's graph from its lowest-id entry, merge with the library's
-    * standard (score desc, vec_id) top-k. The per-cell walk runs in
-    * `flatMapGroups` after a centroid_id semi-join — only probed
-    * cells' rows move, and a [[save]]d graph partition-prunes them at
-    * the scan. The 1-row query collect is the bounded class every
+    * cells ([[Ivf.probeCells]], the probe [[Ivf.search]] runs), beam-walk
+    * each cell's graph from its lowest-id entry, merge with the
+    * library's standard (score desc, vec_id) top-k. The per-cell walk
+    * runs in `flatMapGroups` after a literal centroid_id filter — only
+    * probed cells' rows move, and a [[save]]d graph partition-prunes
+    * them at the scan. The 1-row query collect is the bounded class every
     * imperative-kernel op documents (centroids, codebooks, queries). */
   def search(graph: DataFrame, cents: DataFrame, query: DataFrame,
              nprobe: Int, k: Int, ef: Int = 64): DataFrame = {
@@ -326,16 +326,10 @@ object Nsw {
     import spark.implicits._
     val qv: Array[Float] = query.select(col("qv").cast("array<float>"))
       .head().getSeq[Float](0).toArray
-    val probed = cents.crossJoin(broadcast(query))
-      .where(Pq.cleanCentroid(col("c_emb"), size(col("qv"))))
-      .select(col("centroid_id"),
-        round(graft.functions.VectorFunctions.l2Sq(col("c_emb"), col("qv")), 6).as("cdist"))
-      .orderBy(col("cdist"), col("centroid_id"))
-      .limit(nprobe)
-      .select("centroid_id")
+    val probed = Ivf.probeCells(cents, Ivf.collectQv(query)._2, _ => nprobe)
     val efEff = math.max(ef, k)
     graph
-      .join(broadcast(probed), "centroid_id")
+      .where(col("centroid_id").isin(probed: _*))
       .select(col("centroid_id"), col("vec_id"), col("embedding"), col("neighbors"))
       .as[NswNode]
       .groupByKey(_.centroid_id)
@@ -362,7 +356,7 @@ object Nsw {
     * extended to the NSW family. `allowedIds` is the predicate's id set
     * (a pushed-down filtered scan of the metadata table, column-pruned
     * to vec_id); it tags probed rows via a hash join keyed on vec_id —
-    * AFTER the centroid semi-join, so only probed cells' rows join, and
+    * AFTER the probed-cell filter, so only probed cells' rows join, and
     * with NO broadcast hint: the allowed set grows with SF (the q76
     * discipline — AQE broadcasts at toy scale, shuffles at cluster
     * scale). The walk then runs the IDSelector semantics ([[beam]]'s
@@ -377,16 +371,10 @@ object Nsw {
     import spark.implicits._
     val qv: Array[Float] = query.select(col("qv").cast("array<float>"))
       .head().getSeq[Float](0).toArray
-    val probed = cents.crossJoin(broadcast(query))
-      .where(Pq.cleanCentroid(col("c_emb"), size(col("qv"))))
-      .select(col("centroid_id"),
-        round(graft.functions.VectorFunctions.l2Sq(col("c_emb"), col("qv")), 6).as("cdist"))
-      .orderBy(col("cdist"), col("centroid_id"))
-      .limit(nprobe)
-      .select("centroid_id")
+    val probed = Ivf.probeCells(cents, Ivf.collectQv(query)._2, _ => nprobe)
     val efEff = math.max(ef, k)
     graph
-      .join(broadcast(probed), "centroid_id")
+      .where(col("centroid_id").isin(probed: _*))
       .join(allowedIds.select(col("vec_id"), lit(true).as("m")),
         Seq("vec_id"), "left")
       .select(col("centroid_id"), col("vec_id"), col("embedding"),

@@ -31,7 +31,7 @@ import org.apache.spark.sql.graftbridge.SqlBridge
   */
 object Pq {
 
-  private def widen(v: Any): Double = v match {
+  private[operators] def widen(v: Any): Double = v match {
     case f: Float => f.toDouble
     case d: Double => d
     case n: Number => n.doubleValue()
@@ -146,9 +146,6 @@ object Pq {
     * runs over the kB-scale centroid frame, never the corpus. */
   private[operators] def cleanCentroid(c: Column, dim: Column): Column =
     cleanVec(c, dim) && !exists(c, x => isnan(x))
-
-  private[operators] def cleanCentroid(c: Column, dim: Int): Column =
-    cleanCentroid(c, lit(dim))
 
   /** Pre-filter for encodable rows — a predicate on the RAW embedding
     * column. Filtering on the projected codes' isNotNull instead was
@@ -410,32 +407,22 @@ object Pq {
   }
 
   /** ADC search over probed cells only — the composed IVF×PQ search:
-    * probe the `nprobe` centroids nearest the query (kB-scale frame,
-    * broadcast), then ADC-rerank ONLY the codes in probed cells. On the
-    * [[save]] layout the broadcast join prunes the codes scan to
-    * nprobe/k of its partitions (dynamic partition pruning — the same
-    * mechanism PlanSpec proves for Ivf.search), so search cost is
-    * sublinear in corpus size AND reads the 32×-compressed table: the
-    * reference's HNSW-search capability (Program.cs:207-227) at the
-    * 100 TB layout. */
+    * probe the `nprobe` centroids nearest the query on the driver
+    * ([[Ivf.probeCells]], one k-row collect when this is called), then
+    * ADC-rerank ONLY the codes in probed cells. The codes are filtered
+    * by the literal probed ids, so on the [[save]] layout the planner
+    * prunes the codes scan to nprobe/k of its partitions statically,
+    * and search cost is sublinear in corpus size AND reads the
+    * 32×-compressed table: the reference's HNSW-search capability
+    * (Program.cs:207-227) at the 100 TB layout. Dirty centroids (null,
+    * off-dim, null or NaN element) never probe, the same drop as the
+    * q48 oracle's cents guard and the batched path. */
   def searchAdcCells(codes: DataFrame, cents: DataFrame, cbs: Seq[CentroidSet],
                      query: DataFrame, nprobe: Int, k: Int): DataFrame = {
-    import graft.functions.VectorFunctions.l2Sq
-    val dtabs = distTables(cbs, collectQuery(query))
-    // Unified dirty-centroid rule (see [[cleanCentroid]]): null /
-    // off-dim / null-element rows would claim probe slots via NULLS
-    // FIRST; NaN-element rows would claim them once nprobe exceeds the
-    // clean count. Same drop semantics as the q48 oracle's cents guard
-    // and the batched path's driver-side isNaN filter.
-    val probed = cents
-      .where(cleanCentroid(col("c_emb"), subDim(cbs) * cbs.length))
-      .crossJoin(broadcast(query))
-      .select(col("centroid_id"), round(l2Sq(col("c_emb"), col("qv")), 6).as("cdist"))
-      .orderBy(col("cdist"), col("centroid_id"))
-      .limit(nprobe)
-      .select("centroid_id")
+    val q = collectQuery(query)
+    val dtabs = distTables(cbs, q)
     codes
-      .join(broadcast(probed), "centroid_id")
+      .where(col("centroid_id").isin(Ivf.probeCells(cents, Some(q), _ => nprobe): _*))
       .select(col("vec_id"), round(adcDist(dtabs), 6).as("approx_dist"))
       .orderBy(asc("approx_dist"), asc("vec_id"))
       .limit(k)

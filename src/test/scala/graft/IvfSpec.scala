@@ -1,7 +1,66 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.sum
+import org.apache.spark.sql.types._
 import graft.operators.{Ivf, Knn}
+
+object IvfSpec {
+  import org.apache.spark.sql.functions._
+  import graft.functions.VectorFunctions.{dot, l2Sq}
+
+  /** The Spark-expression probe `Ivf.search` ran before the driver-side
+    * [[Ivf.probeCells]]: the unified dirty-centroid rule against the
+    * query's own size, `round(l2sq, 6)`, (cdist, centroid_id) order.
+    * Kept as the reference the driver ranking must match. */
+  private def exprProbed(cents: DataFrame, query: DataFrame, nprobe: Int): DataFrame = {
+    val (c, q) = (col("c_emb"), col("qv"))
+    cents.crossJoin(broadcast(query.select("qv")))
+      .where(c.isNotNull && size(c) === size(q) && size(array_compact(c)) === size(q) &&
+        !exists(c, x => isnan(x)))
+      .select(col("centroid_id"), round(l2Sq(c, q), 6).as("cdist"))
+      .orderBy(col("cdist"), col("centroid_id"))
+      .limit(nprobe)
+      .select("centroid_id")
+  }
+
+  /** [[exprProbed]]'s ids in rank order; null ids included (they take a
+    * probe slot). */
+  def exprProbe(cents: DataFrame, query: DataFrame, nprobe: Int): Seq[java.lang.Long] =
+    exprProbed(cents, query, nprobe).select(col("centroid_id").cast("long")).collect().toSeq
+      .map(r => if (r.isNullAt(0)) null else java.lang.Long.valueOf(r.getLong(0)))
+
+  /** (files the executed `df` read from its one scan of `root`, parquet
+    * files under the cells [[exprProbe]] picks) — static pruning must
+    * keep the first at most the second. */
+  def filesReadVsProbed(df: DataFrame, root: String, cents: DataFrame,
+                        query: DataFrame, nprobe: Int): (Long, Int) = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    val scans = new AdaptiveSparkPlanHelper {}.collect(plan) {
+      case s: FileSourceScanExec if s.relation.location.rootPaths
+        .exists(_.toString.endsWith(root)) => s
+    }
+    assert(scans.size == 1, s"expected one scan of $root:\n$plan")
+    val probed = exprProbe(cents, query, nprobe).flatMap(Option(_)).map { id =>
+      new java.io.File(s"$root/centroid_id=$id").listFiles().count(_.getName.endsWith(".parquet"))
+    }.sum
+    (scans.head.metrics("numFiles").value, probed)
+  }
+
+  /** `Ivf.search` as it was planned before: the probe as a broadcast
+    * subquery joined to the postings, the query frame cross-joined in. */
+  def exprSearch(postings: DataFrame, cents: DataFrame, query: DataFrame,
+                 nprobe: Int, k: Int): DataFrame =
+    postings
+      .join(broadcast(exprProbed(cents, query, nprobe)), "centroid_id")
+      .crossJoin(broadcast(query))
+      .select(col("vec_id"), round(dot(col("embedding"), col("qv")), 6).as("score"))
+      .orderBy(desc("score"), asc("vec_id"))
+      .limit(k)
+}
 
 /** IVF approximate search quality + index persistence roundtrip. */
 class IvfSpec extends SparkSpec {
@@ -257,6 +316,76 @@ class IvfSpec extends SparkSpec {
       Ivf.searchBatch(postings, c, queries, nprobeAll, K)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     assert(runB(poisoned) == runB(cleansed), "batched probe diverged on dirty centroids")
+  }
+
+  test("driver probe == Spark-expression probe on dirty centroids and dirty queries; " +
+    "search top-k unchanged bit for bit") {
+    import org.apache.spark.sql.functions.col
+    val emb = Tables.embeddings(spark, sf0001)
+    val clean = Ivf.centroids(emb, IvfStep).orderBy("centroid_id").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
+    val postings = Ivf.assign(emb, Ivf.centroids(emb, IvfStep))
+      .join(emb.select("vec_id", "embedding"), "vec_id")
+    val q0 = emb.where(col("vec_id") === QueryVecId).select("embedding")
+      .head().getSeq[Float](0).toArray
+    def boxed(v: Array[Float]): Seq[java.lang.Float] = v.toSeq.map(Float.box)
+    def withElem(v: Array[Float], i: Int, x: java.lang.Float) = boxed(v).updated(i, x)
+    // centroid 6 moved one float ulp away from the query, under a lower
+    // id: its raw distance is larger, its round6 distance (almost
+    // surely) ties, so only the (cdist, centroid_id) order puts it first
+    val (id6, c6) = clean(6)
+    val nudged = c6.clone()
+    nudged(0) = if (c6(0) >= q0(0)) Math.nextUp(c6(0)) else Math.nextDown(c6(0))
+    val rows: Seq[(java.lang.Long, Seq[java.lang.Float])] =
+      clean.toSeq.map { case (id, v) =>
+        val e = id match {
+          case 1L => withElem(v, 3, null)                          // null element
+          case 2L => boxed(v.take(8))                              // off-dim
+          case 3L => withElem(v, 3, Float.NaN)                     // NaN element
+          case 4L => null                                          // null embedding
+          case _ => boxed(v)
+        }
+        (Long.box(id), e)
+      } ++ Seq(
+        (null, boxed(q0)),                        // null id, nearest of all
+        (null, boxed(clean(9)._2)),               // null id, mid-rank
+        (Long.box(1000L), boxed(clean(5)._2)),    // exact tie with cell 5
+        (Long.box(-id6), boxed(nudged)))          // round6 tie with cell 6
+    val schema = StructType(Seq(
+      StructField("centroid_id", LongType, nullable = true),
+      StructField("c_emb", ArrayType(FloatType, containsNull = true), nullable = true)))
+    val dirty = spark.createDataFrame(
+      java.util.Arrays.asList(rows.map { case (id, e) => Row(id, e) }: _*), schema)
+    val qSchema = StructType(Seq(StructField("qv", ArrayType(FloatType, containsNull = true))))
+    def query(v: Seq[java.lang.Float]) =
+      spark.createDataFrame(java.util.List.of(Row(v)), qSchema)
+    val queries = Seq(
+      "clean" -> query(boxed(q0)),
+      "clean double" -> query(boxed(q0)).select(col("qv").cast("array<double>").as("qv")),
+      "scanned" -> Knn.queryVector(emb, QueryVecId),
+      "null element" -> query(withElem(q0, 5, null)),
+      "NaN element" -> query(withElem(q0, 5, Float.NaN)),
+      "wrong dim" -> query(boxed(q0.take(8))),
+      "null vector" -> query(null))
+    val nClean = rows.count { case (_, e) =>
+      e != null && e.length == q0.length && !e.exists(x => x == null || x.isNaN) }
+    val budgets = Seq(1, 3, nClean - 1, nClean, rows.size + 2)
+    queries.foreach { case (name, q) =>
+      val qv = Ivf.collectQv(q)._2
+      budgets.foreach { np =>
+        val want = IvfSpec.exprProbe(dirty, q, np).flatMap(Option(_)).map(_.longValue)
+        assert(Ivf.probeCells(dirty, qv, _ => np) == want, s"$name query, nprobe $np")
+      }
+      Seq(3, rows.size + 2).foreach { np =>
+        assert(Ivf.search(postings, dirty, q, np, K).collect().toSeq ==
+          IvfSpec.exprSearch(postings, dirty, q, np, K).collect().toSeq,
+          s"$name query, nprobe $np: search diverged from the expression formulation")
+      }
+    }
+    // the k overload's budget counts every row, dirty and null-id included
+    val q = queries.head._2
+    assert(Ivf.search(postings, dirty, q, K).collect().toSeq ==
+      IvfSpec.exprSearch(postings, dirty, q, Ivf.autoNProbe(rows.size), K).collect().toSeq)
   }
 
   test("cellBalance: occupancy invariants on a clean corpus, dirty rows land in the right buckets") {

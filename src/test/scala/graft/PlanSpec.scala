@@ -80,8 +80,8 @@ class PlanSpec extends SparkSpec {
   }
 
   test("IVF inline search plans no exchange except the final top-k") {
-    // searchInline = narrow postings (scan → project) ⨝ broadcast probed
-    // centroids → TakeOrderedAndProject. No hash exchange anywhere.
+    // searchInline = narrow postings (scan → filter on the probed cell
+    // ids → project) → TakeOrderedAndProject. No hash exchange anywhere.
     val df = Ivf.searchInline(emb, 25, Knn.queryVector(emb, 0L), 2, 20)
     val p = physical(df)
     assert(p.contains("TakeOrderedAndProject"), s"expected top-k operator:\n$p")
@@ -89,20 +89,43 @@ class PlanSpec extends SparkSpec {
       s"inline IVF search shuffled the postings side:\n$p")
   }
 
+  test("IVF inline search evaluates the nearest-centroid argmin once per row") {
+    // The probed-cell filter is pushed below the Project that computes
+    // the inline centroid_id; a second copy of the argmin there would
+    // double the cost of every row.
+    val q = Knn.queryVector(emb, 0L)
+    val dead = emb.where(col("vec_id") < 5).select("vec_id")
+    Map(
+      "searchInline" -> Ivf.searchInline(emb, 25, q, 2, 20),
+      "searchInlineWithDeletes" -> Ivf.searchInlineWithDeletes(emb, 25, dead, q, 2, 20),
+      "searchInlineFiltered" -> Ivf.searchInlineFiltered(emb, 25, col("label") === 3, q, 2, 20)
+    ).foreach { case (name, df) =>
+      val plan = df.queryExecution.optimizedPlan
+      val n = plan.collect { case node => node.expressions.map(
+        _.collect { case e: graft.functions.NearestCentroid => e }.size).sum }.sum
+      assert(n == 1, s"$name: $n nearest-centroid evaluations in\n$plan")
+    }
+  }
+
   test("IVF search prunes postings partitions to the probed centroids") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
     val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_planspec"
     Ivf.save(emb, 25, path)
     val (postings, cents) = Ivf.load(spark, path)
-    val q = Knn.queryVector(emb, 0L)
-    // The probed-centroid join side is broadcast, and dynamic partition
-    // pruning must reach the postings scan — at 100 TB this is the
-    // difference between reading nprobe partitions and the whole index.
-    val df = Ivf.search(postings, cents, q, 2, 20)
-    df.collect()
-    val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("BroadcastExchange"), s"probed centroids not broadcast:\n$p")
-    assert(p.contains("dynamicpruningexpression"),
-      s"no dynamic partition pruning on the postings scan:\n$p")
+    val qv = emb.where(col("vec_id") === 0L).select("embedding").head().getSeq[Float](0)
+    // the client's shape (a 1-row literal frame) and a scanned lookup;
+    // at 100 TB this is the difference between reading nprobe
+    // partitions and the whole index
+    val literal = spark.createDataFrame(java.util.List.of(Row(qv)),
+      StructType(Seq(StructField("qv", ArrayType(FloatType)))))
+    Seq("literal frame" -> literal, "Knn.queryVector" -> Knn.queryVector(emb, 0L)).foreach {
+      case (name, q) =>
+        val (read, probed) = IvfSpec.filesReadVsProbed(
+          Ivf.search(postings, cents, q, 2, 20), s"$path/postings", cents, q, 2)
+        assert(read > 0 && read <= probed,
+          s"$name: postings scan read $read files; the 2 probed cells hold $probed")
+    }
   }
 
   test("events rollup aggregates with a partial (map-side) stage") {

@@ -119,15 +119,13 @@ class PqSpec extends SparkSpec {
     val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivfpq_planspec"
     Pq.save(emb0001, 25, Pq.codebooks(emb0001, step = 25, m = 8), path)
     val (codes, cents, cbs) = Pq.load(spark, path)
-    val df = Pq.searchAdcCells(codes, cents, cbs,
-      Knn.queryVector(emb0001, 0L), 2, 20)
-    df.collect()
-    val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("BroadcastExchange"), s"probed cells not broadcast:\n$p")
+    val q = Knn.queryVector(emb0001, 0L)
     // at 100 TB this is the difference between reading nprobe cell
     // directories of the 32x-compressed table and scanning all of it
-    assert(p.contains("dynamicpruningexpression"),
-      s"no dynamic partition pruning on the codes scan:\n$p")
+    val (read, probed) = IvfSpec.filesReadVsProbed(
+      Pq.searchAdcCells(codes, cents, cbs, q, 2, 20), s"$path/codes", cents, q, 2)
+    assert(read > 0 && read <= probed,
+      s"codes scan read $read files; the 2 probed cells hold $probed")
   }
 
   test("ADC recall@20 vs exact L2 clears the coarse-codebook floor") {
