@@ -21,9 +21,11 @@ final case class CentroidSet(cids: Array[Long], mat: Array[Array[Double]])
 object VecUtil {
 
   /** Spark's `round(x, 6)` for doubles, bit for bit
-    * (BigDecimal.valueOf → HALF_UP → doubleValue). */
+    * (BigDecimal.valueOf → HALF_UP → doubleValue; NaN and ±Infinity,
+    * which BigDecimal cannot hold, pass through unchanged). */
   def round6(x: Double): Double =
-    java.math.BigDecimal.valueOf(x)
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x)
       .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
   /** Rounding merge window: round6 is MONOTONE, so only candidates with

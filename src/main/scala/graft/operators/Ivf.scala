@@ -21,13 +21,15 @@ import org.apache.spark.sql.graftbridge.SqlBridge
   *    ([[graft.functions.NearestCentroid]]), zero shuffles;
   *  - persist: posting lists written as parquet PARTITIONED BY centroid_id
   *    (the on-disk index; Program.cs:231-244's SerializeGraph);
-  *  - load: plain parquet read of the partitioned layout
-  *    (Program.cs:246-263's DeserializeGraph);
+  *  - load: the partitioned postings over one driver-side listing
+  *    (no listing job), and the k-row centroid table collected once
+  *    into a local relation (Program.cs:246-263's DeserializeGraph);
   *  - search: rank the centroids against the query on the driver
-  *    ([[probeCells]]: one k-row collect, run when `search` is called),
-  *    then exact-rerank only the postings under the nprobe nearest —
-  *    a literal `centroid_id IN (...)` filter, so static partition
-  *    pruning turns the 100 TB scan into an nprobe/k fraction of it.
+  *    ([[probeCells]], run when `search` is called; no job over a
+  *    [[load]]ed table), then exact-rerank only the postings under the
+  *    nprobe nearest — a literal `centroid_id IN (...)` filter, so
+  *    static partition pruning turns the 100 TB scan into an nprobe/k
+  *    fraction of it. A literal query over a loaded index runs one job.
   *
   * Centroid selection is deterministic (every `step`-th vector) so the
   * whole pipeline is oracle-checkable; swapping in Lloyd-iteration
@@ -245,32 +247,64 @@ object Ivf {
     * guide §6: fewer jobs). */
   def saveCounted(vectors: DataFrame, step: Int, path: String): (Long, Long) = {
     val cents = centroids(vectors, step)
-    val obsP = new org.apache.spark.sql.Observation()
     val obsC = new org.apache.spark.sql.Observation()
     // scan → map (argmin) → repartition(centroid_id) → write: EXACTLY
     // one shuffle, and it is the one the layout requires. The embedding
     // rides the same narrow pass (no join-back).
-    vectors
+    val nPost = writeCells(vectors
       .select(col("vec_id"), col("embedding"),
-        nearest(vectors, collectCentroids(cents)).getField("centroid_id").as("centroid_id"))
-      // Cluster rows by centroid before the partitioned write: without
-      // this every task writes a sliver into every centroid dir —
-      // tasks × centroids small files (the classic partitionBy
-      // anti-pattern). After it, each centroid dir gets one file.
-      .repartition(col("centroid_id"))
-      .observe(obsP, count(lit(1)).as("n"))
-      .write.mode("overwrite").partitionBy("centroid_id")
-      .parquet(s"$path/postings")
+        nearest(vectors, collectCentroids(cents)).getField("centroid_id").as("centroid_id")),
+      "overwrite", path)
     cents.observe(obsC, count(lit(1)).as("n"))
       .write.mode("overwrite").parquet(s"$path/centroids")
-    (obsP.get("n").asInstanceOf[Long], obsC.get("n").asInstanceOf[Long])
+    (nPost, obsC.get("n").asInstanceOf[Long])
   }
 
-  /** Load a persisted index. Partition pruning on centroid_id applies to
-    * any filter a search pushes down. */
+  /** Write assigned `(vec_id, embedding, centroid_id)` rows under
+    * `path/postings`, partitioned by centroid_id, and return the row
+    * count observed on the write job. Rows are hash-clustered by
+    * centroid first, so each cell is written by exactly one task, as
+    * one file: without it every task writes a sliver into every cell
+    * dir — tasks × cells small files (the classic partitionBy
+    * anti-pattern). The clustering width is explicit — the session's
+    * `spark.sql.shuffle.partitions`, where an unhinted `repartition`
+    * starts — because AQE coalesces by bytes while a partitioned write
+    * costs per file: a few hundred KB of delta would collapse into one
+    * task that writes every touched cell's file in turn. */
+  private def writeCells(assigned: DataFrame, mode: String, path: String): Long = {
+    val obs = new org.apache.spark.sql.Observation()
+    val width = assigned.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    assigned
+      .repartition(width, col("centroid_id"))
+      .observe(obs, count(lit(1)).as("n"))
+      .write.mode(mode).partitionBy("centroid_id")
+      .parquet(s"$path/postings")
+    obs.get("n").asInstanceOf[Long]
+  }
+
+  /** Load a persisted index: (postings, centroids).
+    *
+    * The postings are the partitioned parquet layout, listed by one
+    * driver-side call ([[SqlBridge.listedParquet]]) instead of Spark's
+    * listing job, which fires once the layout has more than 32 cell
+    * directories. Partition inference, the column types and static
+    * pruning on centroid_id are Spark's, as for `spark.read.parquet`.
+    *
+    * The centroid table (k ≪ n rows, the reference's driver-resident
+    * graph) is collected once, here, into a local relation: every
+    * search ranks it on the driver anyway, so [[probeCells]],
+    * [[collectCentroids]] and the `k` overloads' row count then run no
+    * job. Rows and schema equal the parquet read's. */
   def load(spark: SparkSession, path: String): (DataFrame, DataFrame) =
-    (spark.read.parquet(s"$path/postings"),
-      spark.read.parquet(s"$path/centroids"))
+    (loadPostings(spark, path), loadCentroids(spark, path))
+
+  private def loadPostings(spark: SparkSession, path: String): DataFrame =
+    SqlBridge.listedParquet(spark, s"$path/postings")
+
+  private def loadCentroids(spark: SparkSession, path: String): DataFrame = {
+    val c = spark.read.parquet(s"$path/centroids")
+    spark.createDataFrame(java.util.Arrays.asList(c.collect(): _*), c.schema)
+  }
 
   /** Incremental index maintenance (q55): assign a DELTA batch against
     * an EXISTING index's centroid set and return the merged assignment
@@ -316,7 +350,7 @@ object Ivf {
     * reconcile after an overlapping append, rebuild with [[save]] or
     * dedup postings on vec_id. */
   def append(spark: SparkSession, path: String, delta: DataFrame): Unit =
-    appendWith(collectCentroids(load(spark, path)._2), path, delta)
+    appendWith(collectCentroids(loadCentroids(spark, path)), path, delta)
 
   /** [[append]] against an ALREADY-collected frozen centroid set — the
     * per-batch body for callers that amortize the centroid load over
@@ -332,20 +366,17 @@ object Ivf {
   /** [[appendWith]] returning the number of posting rows appended —
     * observed on the write job itself (the [[saveCounted]] convention),
     * so incremental syncs can fold exact counts forward instead of
-    * re-scanning the whole postings store per report. */
+    * re-scanning the whole postings store per report. Each touched cell
+    * gets one new file, written by one of `spark.sql.shuffle.partitions`
+    * tasks ([[writeCells]]): AQE would coalesce a small delta by bytes
+    * into one task, but a partitioned write costs per file. */
   def appendWithCounted(cs: graft.functions.CentroidSet, path: String,
-                        delta: DataFrame): Long = {
-    val obs = new org.apache.spark.sql.Observation()
-    delta
+                        delta: DataFrame): Long =
+    writeCells(delta
       .where(assignable(modalDim(cs)))
       .select(col("vec_id"), col("embedding"),
-        nearest(delta, cs).getField("centroid_id").as("centroid_id"))
-      .repartition(col("centroid_id"))
-      .observe(obs, count(lit(1)).as("n"))
-      .write.mode("append").partitionBy("centroid_id")
-      .parquet(s"$path/postings")
-    obs.get("n").asInstanceOf[Long]
-  }
+        nearest(delta, cs).getField("centroid_id").as("centroid_id")),
+      "append", path)
 
   /** ANN search: probe the `nprobe` nearest centroids to the query, exact
     * dot-product rerank within probed buckets only. `query` is a 1-row
@@ -393,8 +424,10 @@ object Ivf {
   /** The cells a single-query search probes: the `nprobe` centroids
     * nearest `q`, ranked on the driver — shared by [[search]],
     * [[Pq.searchAdcCells]] and [[Nsw.search]]/[[Nsw.searchFiltered]].
-    * One job collects the centroid table (k rows), and callers filter
-    * by the returned literal ids, which the planner prunes statically.
+    * The centroid table (k rows) is collected: no job for the local
+    * relation [[load]] returns, one job for any other frame. Callers
+    * filter by the returned literal ids, which the planner prunes
+    * statically.
     * (A probe subquery would leave pruning to DPP, which does not fire
     * for a literal query frame, so every cell would be read.)
     *
@@ -422,8 +455,7 @@ object Ivf {
           var acc = 0.0
           var i = 0
           while (i < ce.length) { val d = ce(i) - qv(i); acc += d * d; i += 1 }
-          // Spark's round passes NaN and ±Infinity through unchanged
-          (if (acc.isNaN || acc.isInfinite) acc else VecUtil.round6(acc), id)
+          (VecUtil.round6(acc), id)
         }
         .toSeq
         .sorted(Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Option[Long]))
@@ -561,7 +593,7 @@ object Ivf {
   def compact(spark: SparkSession, path: String): Unit = {
     import org.apache.hadoop.fs.Path
     val dead = tombstones(spark, path)
-    val postings = load(spark, path)._1
+    val postings = loadPostings(spark, path)
     // the only collect: affected CELL IDS — bounded by the centroid
     // count (kB), never by data size
     val affected = postings.join(broadcast(dead), "vec_id")
@@ -613,15 +645,19 @@ object Ivf {
 
   /** [[search]] with the [[autoNProbe]] √-rule default. The cell count
     * is the centroid table's row count, dirty rows included, taken from
-    * the rows [[probeCells]] collects — no separate count job. */
+    * the rows [[probeCells]] collects — no separate count job, and over
+    * a [[load]]ed index no job at all before the search's own. */
   def search(postings: DataFrame, cents: DataFrame, query: DataFrame,
              k: Int): DataFrame =
     searchProbed(postings, cents, query, autoNProbe, k)
 
-  /** [[searchBatch]] with the [[autoNProbe]] √-rule default. */
+  /** [[searchBatch]] with the [[autoNProbe]] √-rule default. The row
+    * count collects the table's empty projection, which runs no job for
+    * a [[load]]ed (local) table; `count()` would plan an aggregate and
+    * run it as a job even there. */
   def searchBatch(postings: DataFrame, cents: DataFrame, queries: DataFrame,
                   k: Int): DataFrame =
-    searchBatch(postings, cents, queries, autoNProbe(cents.count()), k)
+    searchBatch(postings, cents, queries, autoNProbe(cents.select().collect().length), k)
 
   /** [[searchInline]] with the [[autoNProbe]] √-rule default. */
   def searchInline(vectors: DataFrame, step: Int, query: DataFrame,

@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -73,5 +74,45 @@ object SqlBridge {
       cds.queryExecution.analyzed.output, internalRdd)(
       spark, originStats = Some(capped))
     org.apache.spark.sql.classic.Dataset.ofRows(spark, plan)
+  }
+
+  /** `spark.read.parquet(dir)` without Spark's listing job. Spark
+    * lists a tree of more than `parallelPartitionDiscovery.threshold`
+    * (32) directories with a job, which at a few hundred KB of postings
+    * costs more than the read it serves. Here Spark's own lister
+    * (`HadoopFSUtils`, with its hidden-path rule for `_temporary`,
+    * `_SUCCESS`, `.crc` …) walks the tree on the driver — its threshold
+    * argument is unbounded, the session conf is untouched — and the
+    * statuses reach a Spark `InMemoryFileIndex` through a one-shot
+    * `FileStatusCache`. Spark still infers the partition columns and
+    * the data schema, prunes partitions and relists on `refresh()`: the
+    * cache serves only the index's first listing. (Hadoop's recursive
+    * `listFiles` is one call, but on the local filesystem it builds each
+    * status from the file's permissions, which without the native
+    * library forks a process per file.) A missing or empty `dir` falls
+    * back to `spark.read.parquet`, for its errors. */
+  def listedParquet(spark: SparkSession, dir: String): DataFrame = {
+    import org.apache.spark.sql.execution.datasources._
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val path = new Path(dir)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = path.getFileSystem(conf).makeQualified(path)
+    val files = org.apache.spark.util.HadoopFSUtils.parallelListLeafFiles(
+      spark.sparkContext, Seq(root), conf, null, ignoreMissingFiles = false,
+      ignoreLocality = spark.conf.get("spark.sql.sources.ignoreDataLocality").toBoolean,
+      parallelismThreshold = Int.MaxValue, parallelismMax = 1).flatMap(_._2)
+    if (files.isEmpty) return spark.read.parquet(dir)
+    val cache = new FileStatusCache {
+      private var listed = Option(files.toArray)
+      override def getLeafFiles(p: Path): Option[Array[FileStatus]] =
+        if (p == root) { val l = listed; listed = None; l } else None
+      override def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = listed = None
+    }
+    val index = new InMemoryFileIndex(spark, Seq(root), Map.empty, None, cache)
+    val format = new ParquetFileFormat
+    val dataSchema = format.inferSchema(spark, Map.empty, index.allFiles()).get
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+      dataSchema.asNullable, None, format, Map.empty)(spark))
   }
 }

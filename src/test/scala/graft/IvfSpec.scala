@@ -50,6 +50,11 @@ object IvfSpec {
     (scans.head.metrics("numFiles").value, probed)
   }
 
+  /** `n` deterministic 8-dim vectors with ids `from until from + n`. */
+  def wave(spark: org.apache.spark.sql.SparkSession, from: Long, n: Long): DataFrame =
+    spark.range(from, from + n).select(col("id").as("vec_id"),
+      array((1 to 8).map(i => sin(col("id") * lit(0.37 * i)).cast("float")): _*).as("embedding"))
+
   /** `Ivf.search` as it was planned before: the probe as a broadcast
     * subquery joined to the postings, the query frame cross-joined in. */
   def exprSearch(postings: DataFrame, cents: DataFrame, query: DataFrame,
@@ -489,6 +494,80 @@ class IvfSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSet
     val want = Knn.topKDot(all, q, K).collect().map(_.getLong(0)).toSet
     assert(got === want, "post-append full-probe search != exact top-k over the union")
+  }
+
+  test("load of a >32-cell appended index == plain parquet read, with no listing job; " +
+    "loaded centroids collect with no job; a literal search runs one job") {
+    import org.apache.spark.sql.graftbridge.JobLog
+    val sc = spark.sparkContext
+    val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_load"
+    Ivf.save(IvfSpec.wave(spark, 0, 2000), 25, path) // 80 cells
+    val cs = Ivf.collectCentroids(spark.read.parquet(s"$path/centroids"))
+    Ivf.appendWith(cs, path, IvfSpec.wave(spark, 2000, 100))
+    Ivf.appendWith(cs, path, IvfSpec.wave(spark, 2100, 100))
+    // debris Spark's own listing hides: a half-written task dir holding
+    // a real parquet file, a cell-level _SUCCESS, a checksum file (the
+    // local filesystem hides it too) and a plain dot file
+    val postingsDir = new java.io.File(s"$path/postings")
+    val cell = postingsDir.listFiles().filter(_.getName.startsWith("centroid_id=")).head
+    val part = cell.listFiles().find(_.getName.endsWith(".parquet")).get
+    val stray = new java.io.File(postingsDir, "_temporary/0/centroid_id=999")
+    stray.mkdirs()
+    java.nio.file.Files.copy(part.toPath, new java.io.File(stray, part.getName).toPath)
+    Seq("_SUCCESS", ".stray.parquet.crc", ".stray.parquet").foreach(n =>
+      java.nio.file.Files.write(new java.io.File(cell, n).toPath, Array[Byte](1, 2, 3)))
+
+    val ((postings, cents), loadJobs) = JobLog.during(sc)(Ivf.load(spark, path))
+    assert(!loadJobs.exists(_.description.startsWith("Listing leaf files")),
+      s"load ran a listing job: $loadJobs")
+    val plain = spark.read.parquet(s"$path/postings")
+    assert(postings.schema == plain.schema)
+    def rows(df: DataFrame) = df.select("vec_id", "centroid_id", "embedding").collect()
+      .map(r => (r.getLong(0), r.get(1), r.getSeq[Float](2))).sortBy(_._1).toSeq
+    val got = rows(postings)
+    assert(got.size == 2200 && got == rows(plain), "loaded postings != plain parquet read")
+
+    val plainCents = spark.read.parquet(s"$path/centroids")
+    assert(cents.schema == plainCents.schema)
+    val (centRows, centJobs) = JobLog.during(sc)(cents.collect())
+    assert(centJobs.isEmpty, s"collecting loaded centroids ran $centJobs")
+    assert(centRows.map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq ==
+      plainCents.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq)
+
+    val q = spark.createDataFrame(java.util.Collections.singletonList(Row(got(7)._3)),
+      StructType(Seq(StructField("qv", ArrayType(FloatType)))))
+    val (hits, searchJobs) = JobLog.during(sc)(Ivf.search(postings, cents, q, 3, 10).collect())
+    assert(hits.length == 10)
+    assert(searchJobs.size == 1, s"literal search ran ${searchJobs.size} jobs: $searchJobs")
+  }
+
+  test("append writes at full width: one new file per touched cell, count == assignable " +
+    "delta rows, more than one write task") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.graftbridge.JobLog
+    val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_append_width"
+    Ivf.save(IvfSpec.wave(spark, 0, 400), 25, path) // 16 cells
+    val cents = spark.read.parquet(s"$path/centroids")
+    val delta = IvfSpec.wave(spark, 400, 60)
+      .union(spark.range(1).select(lit(999L).as("vec_id"),
+        lit(null).cast("array<float>").as("embedding"))) // unassignable
+    val touched = Ivf.assignWithEmbedding(delta, cents).select("centroid_id").distinct()
+      .collect().map(r => s"centroid_id=${r.getLong(0)}").toSet
+    assert(touched.size > 1)
+    def cellFiles(): Map[String, Set[String]] =
+      new java.io.File(s"$path/postings").listFiles().filter(_.isDirectory).map { d =>
+        d.getName -> d.listFiles().map(_.getName).filter(_.endsWith(".parquet")).toSet
+      }.toMap
+    val before = cellFiles()
+    val (n, jobs) = JobLog.during(spark.sparkContext)(
+      Ivf.appendWithCounted(Ivf.collectCentroids(cents), path, delta))
+    assert(n == 60L, s"observed $n appended rows")
+    cellFiles().foreach { case (cell, files) =>
+      val added = (files -- before.getOrElse(cell, Set.empty)).size
+      assert(added == (if (touched(cell)) 1 else 0), s"$cell gained $added files")
+    }
+    // the write job is the last one; its final stage writes the cells
+    assert(jobs.last.finalTasks > 1, s"append wrote in one task: $jobs")
   }
 
   // Adversarial seeding corpus: one dense blob carries 90 % of the ids

@@ -287,6 +287,22 @@ class PqSpec extends SparkSpec {
     assert(batch(0L) === want, "NaN centroid was probed rather than excluded")
   }
 
+  test("NaN-element query: single and batched probed ADC answer it (NaN distances, id order)") {
+    import graft.operators.Ivf
+    val cbs = Pq.codebooks(emb0001, 25, 8)
+    val cents = Ivf.centroids(emb0001, 25)
+    val codes = Pq.encodeWithCell(emb0001, cents, cbs)
+    val nanQ = emb0001.where(col("vec_id") === 0L).select(
+      expr("transform(embedding, (x, i) -> IF(i = 3, CAST('NaN' AS FLOAT), x))").as("qv"))
+    // every distance is NaN, so probing and ranking fall back to id order
+    val single = Pq.searchAdcCells(codes, cents, cbs, nanQ, 2, 5).collect()
+    assert(single.length == 5 && single.forall(_.getDouble(1).isNaN))
+    val batch = Pq.searchAdcCellsBatch(codes, cents, cbs,
+        nanQ.select(lit(0L).as("query_id"), col("qv")), 2, 5).collect()
+    assert(batch.map(_.getLong(1)).toSeq == single.map(_.getLong(0)).toSeq)
+    assert(batch.forall(_.getDouble(2).isNaN))
+  }
+
   test("batch search drops dirty query rows (null / off-dim qv) instead of NPEing the driver") {
     import graft.operators.Ivf
     val cbs = Pq.codebooks(emb0001, 25, 8)
