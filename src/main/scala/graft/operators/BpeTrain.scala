@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SqlBridge
 
 import graft.functions.Bpe
 
@@ -228,14 +229,14 @@ object BpeTrain {
         sinceCkpt += 1
         if (sinceCkpt >= 8) {
           val ck = words.localCheckpoint(true)
-          lastCkpt.unpersist()
+          SqlBridge.unpin(lastCkpt)
           lastCkpt = ck
           words = ck
           sinceCkpt = 0
         }
       }
     }
-    lastCkpt.unpersist()
+    SqlBridge.unpin(lastCkpt)
     spark.createDataFrame(merges.toSeq).orderBy("rank")
   }
 

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SqlBridge.{leanCheckpoint, unpin}
 import graft.functions.VectorFunctions._
 
 /** Cluster-shaped dedup resolution — the step AFTER candidate-pair
@@ -35,12 +36,9 @@ object Clusters {
     * lineage (and recomputation) cannot grow with the iteration count.
     * Dup clusters from LSH pairs are near-cliques, so in practice this
     * converges in 2-3 rounds; adversarial long-path graphs are bounded
-    * by the pointer jump. Set `reliable = true` on a multi-executor
-    * cluster where executor loss matters: rounds then pin to the
-    * configured `sparkContext.setCheckpointDir` instead of executor
-    * blocks — same plan, durable storage. Rounds that are no longer
-    * reachable (the previous iteration's labels) are unpersisted as the
-    * loop advances, so executor storage stays O(1) in the round count.
+    * by the pointer jump. Rounds that are no longer reachable (the
+    * previous iteration's labels) are unpinned as the loop advances,
+    * so executor storage stays O(1) in the round count.
     *
     * Throws if the `maxIters` guard trips before exact convergence —
     * returning silently would hand callers WRONG cluster ids. The
@@ -48,37 +46,20 @@ object Clusters {
     * this side of 2⁵⁰ nodes; hitting the guard means something is
     * broken, not that more rounds were needed.
     */
-  def connectedComponents(pairs: DataFrame, maxIters: Int = 50,
-                          reliable: Boolean = false): DataFrame = {
-    val sc = pairs.sparkSession.sparkContext
-    // Round-checkpoint bookkeeping: Dataset.unpersist cannot reach a
-    // localCheckpoint's RDD blocks (they are not CacheManager entries),
-    // so track the persistent-RDD ids each checkpoint creates and free
-    // the previous round's explicitly — the DataFrame-API mirror of
-    // GraphX Pregel's prev.unpersist(). The registry diff is safe here:
-    // the loop is single-threaded driver code with no concurrent
-    // persists. Reliable checkpoints write to the checkpoint dir and
-    // hold no executor blocks, so their id set is empty — harmless.
-    def checkpointTracked(df: DataFrame): (DataFrame, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet
-      // leanCheckpoint, not Dataset.localCheckpoint: the plain
-      // checkpoint ATTACHES the input plan's multiplied size estimate
-      // to the new leaf, and this loop's self-join (pointer jump)
-      // would compound those BigInts geometrically across rounds —
-      // planning-time BigInteger.multiply stalls, see SqlBridge
-      val cp = if (reliable) df.checkpoint()
-      else org.apache.spark.sql.graftbridge.SqlBridge.leanCheckpoint(df)
-      (cp, sc.getPersistentRDDs.keySet.toSet -- before)
-    }
-    def free(ids: Set[Int]): Unit =
-      ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-
+  def connectedComponents(pairs: DataFrame, maxIters: Int = 50): DataFrame = {
+    // leanCheckpoint, not Dataset.localCheckpoint: the plain checkpoint
+    // ATTACHES the input plan's multiplied size estimate to the new
+    // leaf, and this loop's self-join (pointer jump) would compound
+    // those BigInts geometrically across rounds — planning-time
+    // BigInteger.multiply stalls, see SqlBridge
     val p = pairs.select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
-    val (edges, edgeIds) = checkpointTracked(
+    val edges = leanCheckpoint(
       p.union(p.select(col("b").as("a"), col("a").as("b"))).toDF("src", "dst"))
-    var (labels, labelIds) = checkpointTracked(
+    // `pin` is the checkpoint leaf under `labels`
+    var pin = leanCheckpoint(
       edges.select(col("src").as("node")).distinct()
         .withColumn("label", col("node")))
+    var labels = pin
     var converged = false
     var it = 0
     while (!converged && it < maxIters) {
@@ -111,18 +92,18 @@ object Clusters {
       // are near-cliques that converge in 2-3 rounds at every sf, so
       // the extra self-join per round costs more than the barrier it
       // occasionally saves; revisit only for long-path graphs.)
-      val (next, nextIds) = checkpointTracked(stepped
+      val next = leanCheckpoint(stepped
         .join(stepped.select(col("node").as("label"), col("label").as("ll")), Seq("label"), "left")
         .select(col("node"), col("prev"),
           least(col("label"), coalesce(col("ll"), col("label"))).as("label")))
       converged = next.where(col("label") =!= col("prev")).isEmpty
       // the previous round's labels are dead past the convergence check
-      free(labelIds)
+      unpin(pin)
+      pin = next
       labels = next.select("node", "label")
-      labelIds = nextIds
       it += 1
     }
-    free(edgeIds)
+    unpin(edges)
     require(converged,
       s"connectedComponents did not converge in $maxIters rounds — " +
         "the result would be incorrect partial labels")

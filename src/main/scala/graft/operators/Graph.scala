@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SqlBridge.{leanCheckpoint, unpin}
 
 /** Distributed graph centrality — PageRank over an edge list, the
   * graph-analytics staple beside [[Clusters.connectedComponents]]'
@@ -49,7 +50,7 @@ object Graph {
     * the per-round join inputs from being re-derived (the failure mode
     * that motivated checkpointing in the first place). Past this depth
     * the lineage chain (and Catalyst analysis time) grows enough that
-    * the checkpointed loop wins again. */
+    * the block-checkpointed [[pageRankBlocked]] wins again. */
   val FuseMaxIters = 4
 
   /** Integer-micro-unit PageRank: `iters` fixed rounds at damping
@@ -59,123 +60,56 @@ object Graph {
     * input — pass [[symmetrize]]d edges for undirected graphs.
     * Returns (node_id, pr_micro) for all nodes.
     *
-    * Two physically different, bit-identical strategies (GraphSpec runs
-    * the differential): iters ≤ [[FuseMaxIters]] (and non-reliable) →
-    * fused single plan over cached inputs; deeper → per-round
-    * checkpointed loop. */
+    * Two bit-identical strategies, chosen by depth (GraphSpec runs the
+    * differential): iters ≤ [[FuseMaxIters]] → fused single plan over
+    * cached inputs; deeper → block-fused rounds with a checkpoint per
+    * block. */
   def pageRank(edges: DataFrame, iters: Int,
-               dampNum: Int = 85, dampDen: Int = 100,
-               reliable: Boolean = false): DataFrame = {
+               dampNum: Int = 85, dampDen: Int = 100): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(dampNum >= 0 && dampDen > 0 && dampNum <= dampDen,
       s"damping $dampNum/$dampDen out of [0, 1]")
-    if (!reliable && iters <= FuseMaxIters)
-      pageRankFused(edges, iters, dampNum, dampDen)
-    else
-      pageRankBlocked(edges, iters, dampNum, dampDen, reliable)
+    if (iters <= FuseMaxIters) pageRankFused(edges, iters, dampNum, dampDen)
+    else pageRankBlocked(edges, iters, dampNum, dampDen)
   }
 
-  /** The checkpointed-loop strategy behind [[pageRank]] for deep
-    * iteration counts (and `reliable` runs). `private[graft]` so
-    * GraphSpec can run the fused-vs-looped differential at a depth the
-    * dispatcher would fuse. */
-  private[graft] def pageRankLooped(edges: DataFrame, iters: Int,
-                                    dampNum: Int, dampDen: Int,
-                                    reliable: Boolean): DataFrame = {
-    val sc = edges.sparkSession.sparkContext
-    // Same round-checkpoint bookkeeping as
-    // [[Clusters.connectedComponents]]: pin the edge frame and each
-    // round's ranks so lineage (= recomputation of the whole chain per
-    // round) cannot grow with the iteration count, and free rounds the
-    // loop has advanced past. Without this the r10 bench measured the
-    // 3-round plan re-deriving the distinct edge list per round — 13×
-    // DuckDB; pinned, the loop touches each input once.
-    def checkpointTracked(df: DataFrame): (DataFrame, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet
-      val cp = if (reliable) df.checkpoint() else df.localCheckpoint()
-      (cp, sc.getPersistentRDDs.keySet.toSet -- before)
-    }
-    def free(ids: Set[Int]): Unit =
-      ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-
-    val (e, eIds) = checkpointTracked(
-      edges.select(col("src").cast("long"), col("dst").cast("long")))
-    val (deg, degIds) = checkpointTracked(
-      e.groupBy("src").agg(count(lit(1)).as("outdeg")))
+  /** The BLOCK-FUSED strategy behind [[pageRank]] for deep iteration
+    * counts: fuse `blockSize`-round BLOCKS of the recurrence into
+    * single declarative plans and checkpoint once per block, so a
+    * depth-`iters` run pays ⌈iters/B⌉ materialization barriers instead
+    * of `iters` (each localCheckpoint is a blocking job with ~0.5 s
+    * fixed overhead at bench scale, and the dominant deep-loop cost at
+    * sf1 was exactly those barriers). Lineage stays bounded — each
+    * block's plan is ≤ B rounds deep over the pinned edge/degree/ranks
+    * frames. Without those pins the r10 bench measured the 3-round
+    * plan re-deriving the distinct edge list per round — 13× DuckDB.
+    * Arithmetic is identical to the fused plan (floor `div`
+    * contributions, integer damping + teleport), so blocked == fused
+    * bit-for-bit at any depth; `blockSize = 1` is the per-round
+    * checkpointed loop (GraphSpec differentials). `private[graft]` so
+    * GraphSpec can run it at a depth the dispatcher would fuse. */
+  private[graft] def pageRankBlocked(edges: DataFrame, iters: Int,
+                                     dampNum: Int, dampDen: Int,
+                                     blockSize: Int = FuseMaxIters): DataFrame = {
+    require(blockSize >= 1)
+    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
+      .localCheckpoint()
+    val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg")).localCheckpoint()
     // deg already holds exactly one row per source node — the node set
     // is a projection of it, no second distinct exchange over the edges
     val nodes = deg.select(col("src").as("node_id"))
     val n = deg.count() // one job; N is a scalar in every update term
     require(n > 0, "empty edge list")
     val teleport = (1000000L * (dampDen - dampNum)) / (dampDen * n)
-    var (pr, prIds) = checkpointTracked(
-      nodes.withColumn("pr_micro", lit(1000000L / n)))
-    (1 to iters).foreach { _ =>
-      // `div`, not `/`: Column./ is DOUBLE division, and a truncated
-      // double quotient can land one off the exact floor for large
-      // numerators — `div` is the 64-bit integer floor both engines share
-      val contrib = pr
-        .join(e, pr("node_id") === e("src"))
-        .join(deg, "src")
-        .select(col("dst").as("node_id"),
-          expr("pr_micro div outdeg").as("contrib"))
-        .groupBy("node_id").agg(sum("contrib").as("s"))
-      val (next, nextIds) = checkpointTracked(
-        nodes.join(contrib, Seq("node_id"), "left")
-          .select(col("node_id"),
-            expr(s"${teleport}L + (${dampNum}L * coalesce(s, 0L)) div ${dampDen}L")
-              .as("pr_micro")))
-      free(prIds)
-      pr = next
-      prIds = nextIds
-    }
-    free(eIds); free(degIds)
-    pr
-  }
-
-  /** The BLOCK-FUSED strategy behind [[pageRank]] for deep iteration
-    * counts (r14, replacing the per-round checkpointed loop on the
-    * dispatch path): fuse [[FuseMaxIters]]-round BLOCKS of the
-    * recurrence into single declarative plans and checkpoint once per
-    * block, so a depth-`iters` run pays ⌈iters/B⌉ materialization
-    * barriers instead of `iters` (each localCheckpoint is a blocking
-    * job with ~0.5 s fixed overhead at bench scale, and the dominant
-    * deep-loop cost at sf1 was exactly those barriers). Lineage stays
-    * bounded — each block's plan is ≤ B rounds deep over the pinned
-    * edge/degree/ranks frames, the property the per-round loop
-    * existed to guarantee. Arithmetic is identical (floor `div`
-    * contributions, integer damping + teleport), so blocked == looped
-    * == fused bit-for-bit at any depth (GraphSpec differential).
-    * [[pageRankLooped]] remains for `reliable` + spec duty. */
-  private[graft] def pageRankBlocked(edges: DataFrame, iters: Int,
-                                     dampNum: Int, dampDen: Int,
-                                     reliable: Boolean,
-                                     blockSize: Int = FuseMaxIters): DataFrame = {
-    require(blockSize >= 1)
-    val sc = edges.sparkSession.sparkContext
-    def checkpointTracked(df: DataFrame): (DataFrame, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet
-      val cp = if (reliable) df.checkpoint() else df.localCheckpoint()
-      (cp, sc.getPersistentRDDs.keySet.toSet -- before)
-    }
-    def free(ids: Set[Int]): Unit =
-      ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-
-    val (e, eIds) = checkpointTracked(
-      edges.select(col("src").cast("long"), col("dst").cast("long")))
-    val (deg, degIds) = checkpointTracked(
-      e.groupBy("src").agg(count(lit(1)).as("outdeg")))
-    val nodes = deg.select(col("src").as("node_id"))
-    val n = deg.count()
-    require(n > 0, "empty edge list")
-    val teleport = (1000000L * (dampDen - dampNum)) / (dampDen * n)
-    var (pr, prIds) = checkpointTracked(
-      nodes.withColumn("pr_micro", lit(1000000L / n)))
+    var pr = nodes.withColumn("pr_micro", lit(1000000L / n)).localCheckpoint()
     var done = 0
     while (done < iters) {
       val rounds = math.min(blockSize, iters - done)
       var cur = pr
       (1 to rounds).foreach { _ =>
+        // `div`, not `/`: Column./ is DOUBLE division, and a truncated
+        // double quotient can land one off the exact floor for large
+        // numerators — `div` is the 64-bit integer floor both engines share
         val contrib = cur.as("p")
           .join(e.as("ed"), col("p.node_id") === col("ed.src"))
           .join(deg.as("dg"), col("ed.src") === col("dg.src"))
@@ -189,17 +123,15 @@ object Graph {
       }
       done += rounds
       // Block boundary: pin the block's result, free the previous pin.
-      // The FINAL block is pinned too — the looped strategy's return
-      // convention (its data no longer references e/deg, so those pins
-      // can be freed here; a lazy final block would still read the
-      // checkpointed inputs, whose lineage truncation makes
-      // unpersist-then-recompute unsafe, not merely slow).
-      val (next, nextIds) = checkpointTracked(cur)
-      free(prIds)
+      // The FINAL block is pinned too, so the returned ranks no longer
+      // reference e/deg and those pins can be freed here (a lazy final
+      // block would still read the checkpointed inputs, whose lineage
+      // truncation makes unpin-then-recompute unsafe, not merely slow).
+      val next = cur.localCheckpoint()
+      unpin(pr)
       pr = next
-      prIds = nextIds
     }
-    free(eIds); free(degIds)
+    unpin(e); unpin(deg)
     pr
   }
 
@@ -210,8 +142,8 @@ object Graph {
     * rounds hit the cache — and every round's frames carry string
     * aliases so the repeated appearance of the same source in one plan
     * can't trip ambiguous-self-join resolution. Arithmetic is
-    * identical to the loop: floor `div` contributions, integer
-    * damping + teleport.
+    * identical to the blocked strategy: floor `div` contributions,
+    * integer damping + teleport.
     *
     * Cache lifecycle (the r12 leak): CacheManager entries are keyed on
     * the logical plan and held by the SESSION, so with no release path
@@ -510,7 +442,6 @@ object Graph {
     * |reach_d| − |reach_{d−1}|, the count of nodes FIRST reached at d. */
   private[graft] def neighborhoodLevels(edges: DataFrame, maxDepth: Int): DataFrame = {
     import graft.functions.Bitmap._
-    import org.apache.spark.sql.graftbridge.SqlBridge.leanCheckpoint
     require(maxDepth >= 1, s"maxDepth must be >= 1, got $maxDepth")
     val e = leanCheckpoint(symmetrize(edges))
     var state = leanCheckpoint(
@@ -566,10 +497,12 @@ object Graph {
     * diameter. Callers with a genuine budget raise maxRounds; nobody
     * gets too-high core numbers labeled exact. Returns (node, core). */
   def coreDecomposition(edges: DataFrame, maxRounds: Int = 50): DataFrame = {
-    import org.apache.spark.sql.graftbridge.SqlBridge.leanCheckpoint
     val e = leanCheckpoint(symmetrize(edges))
-    var c = leanCheckpoint(
+    // `pin` is the checkpoint leaf under `c`, freed once the next
+    // round's estimates are materialized
+    var pin = leanCheckpoint(
       e.groupBy(col("src").as("node")).agg(count(lit(1)).as("core")))
+    var c = pin
     val hIndex = {
       val sorted = sort_array(col("cs"), asc = false)
       size(filter(
@@ -606,14 +539,19 @@ object Graph {
           .select(col("node"), col("prev"),
             least(col("prev"), hIndex).as("core")))
       changed = next.where(col("core") =!= col("prev")).count()
+      unpin(pin)
+      pin = next
       c = next.select("node", "core")
     }
-    if (changed > 0)
+    unpin(e)
+    if (changed > 0) {
+      unpin(pin)
       throw new IllegalStateException(
         s"coreDecomposition did not converge within $maxRounds rounds " +
           s"($changed estimates still falling) — the h-index estimates are " +
           "upper bounds until the fixed point, so returning them would " +
           "overstate core numbers; raise maxRounds")
+    }
     c
   }
 
@@ -794,11 +732,13 @@ object Graph {
     * select) and feeds the next half-round, so a lazy chain re-executes
     * the whole upstream per reference, ~2^(2·iters) edge scans (the
     * first cut measured 22 s at sf0.1 for 2 rounds; checkpointed, the
-    * loop touches the edges once per half-round — the pageRankLooped
-    * discipline). */
+    * loop touches the edges once per half-round — the
+    * [[pageRankBlocked]] discipline). The returned top-n is its own
+    * eager checkpoint, so every half-round pin is freed on return. */
   def hitsAuthorities(edges: DataFrame, iters: Int, topN: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val e = edges.select(col("c"), col("s")).persist()
+    val pins = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     try {
       val M = lit(1000000L)
       var h: DataFrame = null
@@ -819,6 +759,7 @@ object Graph {
         a = araw.crossJoin(broadcast(araw.agg(max(col("araw")).as("amax"))))
           .select(col("s"), expr("araw * 1000000 div amax").as("a"))
           .localCheckpoint(true)
+        pins += a
         // the hub half-round only feeds the NEXT round's authorities;
         // the report reads `a` alone, so the last round's h is dead
         // work — skip it (r19)
@@ -827,6 +768,7 @@ object Graph {
           h = hraw.crossJoin(broadcast(hraw.agg(max(col("hraw")).as("hmax"))))
             .select(col("c"), expr("hraw * 1000000 div hmax").as("h"))
             .localCheckpoint(true)
+          pins += h
         }
       }
       val deg = e.groupBy(col("s")).agg(count(lit(1)).as("n_customers"))
@@ -836,7 +778,7 @@ object Graph {
         .orderBy(col("authority_micro").desc, col("s_suppkey"))
         .limit(topN)
         .localCheckpoint(true)
-    } finally { e.unpersist(); () }
+    } finally { e.unpersist(); pins.foreach(unpin) }
   }
 
   /** [[hitsAuthorities]] on the purchase graph: distinct

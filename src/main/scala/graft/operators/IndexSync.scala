@@ -110,7 +110,7 @@ object IndexSync {
     val appendOnly = from > 0 && span.nonEmpty &&
       span.forall(id => Snapshots.opOf(spark, tablePath, id) == "append")
     if (appendOnly) {
-      val cs = Ivf.collectCentroids(Ivf.load(spark, indexPath)._2)
+      val cs = Ivf.collectCentroids(Ivf.loadCentroids(spark, indexPath))
       val appended = span.map { id =>
         Ivf.appendWithCounted(cs, indexPath,
           Snapshots.deltaOf(spark, tablePath, id))

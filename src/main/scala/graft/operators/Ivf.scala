@@ -301,7 +301,8 @@ object Ivf {
   private def loadPostings(spark: SparkSession, path: String): DataFrame =
     SqlBridge.listedParquet(spark, s"$path/postings")
 
-  private def loadCentroids(spark: SparkSession, path: String): DataFrame = {
+  /** The centroid table of [[load]] alone: reads no postings. */
+  private[graft] def loadCentroids(spark: SparkSession, path: String): DataFrame = {
     val c = spark.read.parquet(s"$path/centroids")
     spark.createDataFrame(java.util.Arrays.asList(c.collect(): _*), c.schema)
   }
@@ -835,6 +836,8 @@ object Ivf {
       .select(col("vec_id").as("centroid_id"), col("embedding").as("c_emb"))
     if (seedRows.isEmpty) return empty
     var cand = seedRows
+    // every candidate pin; all are dead once the final set is collected
+    val pins = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var r = 0
     var drained = false
     while (r < rounds && !drained) {
@@ -852,10 +855,12 @@ object Ivf {
         val picked = scored.where(u < p)
           .select(col("vec_id").as("centroid_id"), col("embedding").as("c_emb"))
         cand = SqlBridge.leanCheckpoint(cand.unionByName(picked), eager = false)
+        pins += cand
       }
     }
     // Weighted reduction to k, driver-side over the bounded candidates.
     val cs = collectCentroids(cand)
+    pins.foreach(SqlBridge.unpin)
     val wMap = clean
       .select(nearest(clean, cs).getField("centroid_id").as("cid"))
       .groupBy("cid").agg(count(lit(1)).as("w")).collect()
@@ -918,10 +923,7 @@ object Ivf {
     // (vec_id, embedding) frame. Every collected statistic lands in
     // driver rows before return, so the blocks are freed eagerly —
     // nothing the returned frame reads survives this call.
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
     val v = SqlBridge.leanCheckpoint(vectors.select("vec_id", "embedding"))
-    val vIds = sc.getPersistentRDDs.keySet.toSet -- before
     try {
       val n = v.count()
       val step = math.max(1, math.ceil(n.toDouble / k).toInt)
@@ -944,8 +946,6 @@ object Ivf {
       }
       rows.toDF("method", "n_cells", "n_assigned", "inertia", "max_cell", "max_share")
         .orderBy("method")
-    } finally {
-      vIds.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-    }
+    } finally SqlBridge.unpin(v)
   }
 }

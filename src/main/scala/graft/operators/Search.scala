@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftbridge.SqlBridge.{leanCheckpoint, unpin}
 import graft.functions.VectorFunctions._
 import graft.operators.TextAnalysis.tokens
 
@@ -448,18 +449,12 @@ object Search {
     * argmax is a |sources|-bounded GroupedTopK-class window over each
     * doc's score list. */
   def sourceConfusion(docs: DataFrame): DataFrame = {
-    val sc = docs.sparkSession.sparkContext
-    def tracked(df: DataFrame): (DataFrame, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet
-      val cp = org.apache.spark.sql.graftbridge.SqlBridge.leanCheckpoint(df)
-      (cp, sc.getPersistentRDDs.keySet.toSet -- before)
-    }
     // Materialized once: idf, the per-source profiles, the doc norms
     // and the score join all consume this grain, and their differing
     // projections defeat exchange reuse — unmaterialized, the plan
     // re-ran the tokenize+explode+aggregate subtree per consumer (24
     // parquet scans in the r19 before-plan; 4 after)
-    val (terms, termIds) = tracked(docs
+    val terms = leanCheckpoint(docs
       .select(col("doc_id"), col("source"), explode(tokens(col("text"))).as("term"))
       .groupBy("doc_id", "source", "term").agg(count(lit(1)).as("tf")))
     val n = docs.select(countDistinct("doc_id").as("n"))
@@ -473,14 +468,14 @@ object Search {
     // exchange across them, but each consumer still re-executed the
     // terms-side idf JOIN (a join's output is not an exchange, so
     // nothing caches it). Folding idf in here makes that join run once;
-    // the terms blocks — now consumed by nothing downstream — are freed
-    // immediately (the checkpointTracked/free discipline), so peak
-    // pinned storage stays one corpus-term-grain frame, not two (r20).
+    // the terms blocks — now consumed by nothing downstream — are
+    // unpinned immediately, so peak pinned storage stays one
+    // corpus-term-grain frame, not two (r20).
     // Matched A/Bs: sf0.1 2.32→2.84 s (the barrier LOSES at toy scale)
     // but sf1 16.85→8.20 s — the re-executed corpus-grain join is the
     // scale cost, the barrier a constant; shipped for the 10×-data 2×.
-    val (w, _) = tracked(terms.join(idf, "term"))
-    termIds.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
+    val w = leanCheckpoint(terms.join(idf, "term"))
+    unpin(terms)
     val profiles = w.groupBy(col("source").as("p_source"), col("term"))
       .agg(sum("tf").as("tf_s"), first("idf_micro").as("idf_micro"))
     val pnorm = profiles.groupBy("p_source")

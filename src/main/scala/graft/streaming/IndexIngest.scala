@@ -41,7 +41,7 @@ object IndexIngest {
   def ingest(vectors: DataFrame, path: String,
              checkpoint: Option[String] = None): StreamingQuery = {
     val spark = vectors.sparkSession
-    val cs = Ivf.collectCentroids(Ivf.load(spark, path)._2)
+    val cs = Ivf.collectCentroids(Ivf.loadCentroids(spark, path))
     val writer = vectors.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         Ivf.appendWith(cs, path, batch)

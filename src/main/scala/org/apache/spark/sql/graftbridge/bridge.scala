@@ -76,6 +76,21 @@ object SqlBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(spark, plan)
   }
 
+  /** Free the executor blocks a checkpoint pins: the RDD under a
+    * [[leanCheckpoint]] or `Dataset.localCheckpoint` leaf. Neither pin
+    * is a CacheManager entry, so `Dataset.unpersist` leaves it in
+    * place; this unpersists the leaf's own RDD. Anything that is not a
+    * checkpoint leaf throws, so a free can never silently do nothing.
+    * The caller must not read `cp` (or a frame built on it) afterwards:
+    * a local checkpoint's lineage is truncated, so a freed block cannot
+    * be recomputed. */
+  def unpin(cp: org.apache.spark.sql.Dataset[_]): Unit =
+    cp.queryExecution.logical match {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(blocking = false)
+      case other => throw new IllegalArgumentException(
+        s"unpin needs a checkpoint leaf, got ${other.nodeName}")
+    }
+
   /** `spark.read.parquet(dir)` without Spark's listing job. Spark
     * lists a tree of more than `parallelPartitionDiscovery.threshold`
     * (32) directories with a job, which at a few hundred KB of postings

@@ -1,13 +1,19 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Graph
+import graft.operators.{BpeTrain, Clusters, Graph, Ivf, Search}
+import org.apache.spark.sql.graftbridge.{PinLog, SqlBridge}
 
 /** Integer-micro-unit PageRank (q88): differential against a
   * driver-side reference with identical floor arithmetic, structural
   * rank ordering, and mass conservation up to floor loss. */
 class GraphSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Symmetrized part–supplier graph of the sf0.001 lineitems. */
+  private def partSuppEdges = Graph.symmetrize(Tables.lineitem(spark, sf0001)
+    .select((col("l_partkey") * 2).as("src"),
+      (col("l_suppkey") * 2 + 1).as("dst")).distinct())
 
   test("pageRank == driver-side integer reference on a crafted star graph") {
     val edges = Seq((0L, 1L), (0L, 2L), (0L, 3L), (0L, 4L)).toDF("src", "dst")
@@ -56,52 +62,76 @@ class GraphSpec extends SparkSpec {
 
   test("fused and checkpointed-loop strategies are bit-identical on the " +
     "corpus graph and on the crafted star") {
-    // iters=3 ≤ FuseMaxIters → public API takes the fused path; call the
-    // looped strategy directly for the other side of the differential
+    // iters=3 ≤ FuseMaxIters → public API takes the fused path; a
+    // blockSize=1 blocked run (one checkpoint per round) is the other
+    // side of the differential
+    def looped(e: org.apache.spark.sql.DataFrame, iters: Int) =
+      Graph.pageRankBlocked(e, iters, 85, 100, blockSize = 1)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val star = Graph.symmetrize(
       Seq((0L, 1L), (0L, 2L), (0L, 3L), (0L, 4L)).toDF("src", "dst"))
     val fusedStar = Graph.pageRank(star, 3).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val loopStar = Graph.pageRankLooped(star, 3, 85, 100, reliable = false)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val loopStar = looped(star, 3)
     assert(fusedStar == loopStar, s"star: fused $fusedStar != loop $loopStar")
 
-    val edges = Graph.symmetrize(Tables.lineitem(spark, sf0001)
-      .select((col("l_partkey") * 2).as("src"),
-        (col("l_suppkey") * 2 + 1).as("dst")).distinct())
+    val edges = partSuppEdges
     val fused = Graph.pageRank(edges, 3).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val looped = Graph.pageRankLooped(edges, 3, 85, 100, reliable = false)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(fused == looped,
-      s"corpus graph: ${fused.size} fused vs ${looped.size} looped nodes; " +
-        s"first diff: ${(fused.toSet diff looped.toSet).take(3)}")
+    val loop = looped(edges, 3)
+    assert(fused == loop,
+      s"corpus graph: ${fused.size} fused vs ${loop.size} looped nodes; " +
+        s"first diff: ${(fused.toSet diff loop.toSet).take(3)}")
   }
 
   test("block-fused deep strategy == per-round loop == repeated shallow " +
     "fusion at depth 7 (odd vs blockSize, so the tail block is short)") {
-    val edges = Graph.symmetrize(Tables.lineitem(spark, sf0001)
-      .select((col("l_partkey") * 2).as("src"),
-        (col("l_suppkey") * 2 + 1).as("dst")).distinct())
+    val edges = partSuppEdges
     // public API at depth 7 dispatches to the blocked strategy
     val blocked = Graph.pageRank(edges, 7).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val looped = Graph.pageRankLooped(edges, 7, 85, 100, reliable = false)
+    val looped = Graph.pageRankBlocked(edges, 7, 85, 100, blockSize = 1)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(blocked == looped,
       s"depth 7: blocked != looped; first diff: " +
         s"${(blocked.toSet diff looped.toSet).take(3)}")
-    // a degenerate blockSize=1 blocked run IS the per-round loop
-    val b1 = Graph.pageRankBlocked(edges, 7, 85, 100, reliable = false,
-      blockSize = 1).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(b1 == looped, "blockSize=1 diverged from the per-round loop")
-    // checkpoint pins do not accumulate past the run (edge/degree/old
-    // rank pins are freed; only the returned frame's pin remains)
-    val before = spark.sparkContext.getPersistentRDDs.size
-    Graph.pageRank(edges, 7).count()
-    val after = spark.sparkContext.getPersistentRDDs.size
-    assert(after - before <= 1,
-      s"deep run leaked checkpoint pins: $before -> $after")
+  }
+
+  test("checkpoint pins do not accumulate past the run: each iterative " +
+    "operator leaves at most the pins its returned frame reads") {
+    val sc = spark.sparkContext
+    val li = Tables.lineitem(spark, sf0001)
+    val edges = partSuppEdges
+    val docs = Tables.documents(spark, sf0001)
+    // (operator, pins its returned frame reads, a run that reads the
+    // whole returned frame — so a pin freed too early fails here too)
+    val rows = Seq[(String, Int, () => Any)](
+      ("pageRank depth 7", 1, () => Graph.pageRank(edges, 7).count()),
+      ("connectedComponents", 1, () => Clusters.connectedComponents(
+        edges.select(col("src").as("a"), col("dst").as("b"))).count()),
+      ("coreDecomposition", 1, () => Graph.coreDecomposition(edges).count()),
+      ("hitsAuthorities", 1, () => Graph.supplierAuthorities(li,
+        Tables.orders(spark, sf0001), 3, 20).count()),
+      ("BpeTrain.train", 0, () => BpeTrain.train(docs, 24).count()),
+      ("Ivf.seedingQuality", 0, () =>
+        Ivf.seedingQuality(Tables.embeddings(spark, sf0001), 8).count()),
+      ("Search.sourceConfusion", 1, () => Search.sourceConfusion(docs).count()))
+    // Two counts per row: the persistent-RDD registry, and PinLog's
+    // pins not freed explicitly. The registry alone can pass a leaking
+    // operator, because a GC inside the row lets the ContextCleaner
+    // free unreachable pins.
+    val leaks = rows.flatMap { case (name, kept, run) =>
+      val before = sc.getPersistentRDDs.size
+      val left = PinLog.leftPinned(sc)(run())
+      val after = sc.getPersistentRDDs.size
+      if (after > before + kept || left.size > kept)
+        Some(s"$name: registry $before -> $after, ${left.size} pins left " +
+          s"(allowed +$kept)")
+      else None
+    }
+    assert(leaks.isEmpty, s"checkpoint pins leaked: ${leaks.mkString("; ")}")
+    // a free of anything but a checkpoint leaf must throw, never no-op
+    intercept[IllegalArgumentException](SqlBridge.unpin(edges))
   }
 
   test("fused path caches are bounded: a new input graph releases the " +
