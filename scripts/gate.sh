@@ -1,8 +1,9 @@
 #!/usr/bin/env bash
-# Full local gate: compile + tests + oracle correctness (sf0.01) + bench
-# (sf0.1). Builds offline and runs the tests with the ROADMAP tier-1
-# settings: offline coursier/sbt, one Spark core per host CPU, and a
-# Spark heap of half the host's memory clamped to [2g, 8g].
+# Full local gate: benchmark unit tests + compile + tests + oracle
+# correctness (sf0.01) + bench (sf0.1). Builds offline and runs the
+# tests with the ROADMAP tier-1 settings: offline coursier/sbt, one
+# Spark core per host CPU, and a Spark heap of half the host's memory
+# clamped to [2g, 8g]. The benchmark's own unit tests need no JVM.
 # Usage: scripts/gate.sh
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -13,6 +14,9 @@ export SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)"
 export SPARK_DRIVER_MEM="$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' 2>/dev/null </proc/meminfo || echo 2g)"
 export SPARK_LOCAL_DIRS=/tmp/spark-local
 DATA="$HOME/testdata"
+
+echo "=== benchmark unit tests (no JVM) ==="
+python3 -m unittest discover -s e2ebench/tests 2>&1 | tail -1
 
 echo "=== compile + test ==="
 sbt --batch -Dsbt.log.noformat=true Test/compile 2>&1 | tail -1

@@ -439,15 +439,18 @@ object Graph {
     * rounds.
     *
     * Returns (node, depth, newly) for depth 1..maxDepth — newly =
-    * |reach_d| − |reach_{d−1}|, the count of nodes FIRST reached at d. */
+    * |reach_d| − |reach_{d−1}|, the count of nodes FIRST reached at d.
+    * The result reads only the maxDepth per-depth pins: the edge and
+    * initial-state pins are freed once the last depth is materialized. */
   private[graft] def neighborhoodLevels(edges: DataFrame, maxDepth: Int): DataFrame = {
     import graft.functions.Bitmap._
     require(maxDepth >= 1, s"maxDepth must be >= 1, got $maxDepth")
     val e = leanCheckpoint(symmetrize(edges))
-    var state = leanCheckpoint(
+    val state0 = leanCheckpoint(
       e.groupBy(col("src").as("node"))
         .agg(bitmapBuild(col("src")).as("reach"))
         .withColumn("card", bitmapCard(col("reach"))))
+    var state = state0
     val levels = scala.collection.mutable.ListBuffer[DataFrame]()
     for (d <- 1 to maxDepth) {
       // One aggregation per depth (r20, guide §2): the node's own reach
@@ -471,6 +474,7 @@ object Graph {
       levels += next.select(col("node"), lit(d).as("depth"), col("newly"))
       state = next.select("node", "reach", "card")
     }
+    unpin(e); unpin(state0)
     levels.reduce(_ unionByName _)
   }
 

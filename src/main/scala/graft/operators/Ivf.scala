@@ -62,17 +62,7 @@ object Ivf {
       .filter(r => !r.isNullAt(0) && !r.isNullAt(1) &&
         !r.getSeq[Any](1).contains(null))
       .sortBy(_.getLong(0))
-    CentroidSet(
-      rows.map(_.getLong(0)),
-      rows.map(_.getSeq[Any](1).map {
-        case f: Float => f.toDouble
-        case d: Double => d
-        case n: Number => n.doubleValue()
-        // null element → NaN distance → that centroid never wins any
-        // argmin (the kernel's acc<=bound test fails on NaN), exactly
-        // the old join formulation's NULL-l2sq-poisons-this-candidate
-        case null => Double.NaN
-      }.toArray))
+    CentroidSet(rows.map(_.getLong(0)), rows.map(_.getSeq[Any](1).map(Pq.widen).toArray))
   }
 
   /** Map-only argmin column over a broadcast centroid set: returns
@@ -85,13 +75,14 @@ object Ivf {
       SqlBridge.expression(col("embedding")),
       vectors.sparkSession.sparkContext.broadcast(cs)))
 
-  /** Modal (most common) centroid dimension of a collected set — the
-    * dimension assignable embeddings must have. Majority vote with a
-    * smallest-dim tie-break, NOT `head`: a single off-dim first row
-    * must not redefine the set's dimension. */
-  private[operators] def modalDim(cs: CentroidSet): Int =
-    if (cs.mat.isEmpty) 0
-    else cs.mat.groupBy(_.length).maxBy { case (len, g) => (g.length, -len) }._1
+  /** Modal (most common) length of collected vectors, 0 for none — the
+    * dimension assignable embeddings must have, and the one
+    * [[Pq.codebooks]] slices. Majority vote with a smallest-dim
+    * tie-break, NOT `head`: a single off-dim first row must not
+    * redefine the set's dimension. */
+  private[operators] def modalDim(vs: Array[Array[Double]]): Int =
+    if (vs.isEmpty) 0
+    else vs.groupBy(_.length).maxBy { case (len, g) => (g.length, -len) }._1
 
   /** Pre-filter for "assignable" rows, as a predicate on the RAW
     * embedding column (null / off-dimension rows can never win the
@@ -159,7 +150,7 @@ object Ivf {
   def assignWithEmbedding(vectors: DataFrame, cents: DataFrame): DataFrame = {
     val cs = collectCentroids(cents)
     vectors
-      .where(assignable(modalDim(cs)))
+      .where(assignable(modalDim(cs.mat)))
       .select(col("vec_id"), col("embedding"),
         nearest(vectors, cs).getField("centroid_id").as("centroid_id"))
   }
@@ -177,7 +168,7 @@ object Ivf {
       SqlBridge.expression(col("embedding")),
       vectors.sparkSession.sparkContext.broadcast(cs)))
     vectors
-      .where(assignable(modalDim(cs)))
+      .where(assignable(modalDim(cs.mat)))
       .select(col("vec_id"), col("embedding"), t2.as("t2"))
       .select(col("vec_id"), col("embedding"),
         col("t2.centroid_id").as("centroid_id"), col("t2.dist").as("dist"),
@@ -217,7 +208,7 @@ object Ivf {
       // whole argmin per row).
       val cs = collectCentroids(cents)
       val assigned = vectors
-        .where(assignable(modalDim(cs)))
+        .where(assignable(modalDim(cs.mat)))
         .select(
           nearest(vectors, cs).getField("centroid_id").as("centroid_id"),
           col("embedding"))
@@ -254,31 +245,32 @@ object Ivf {
     val nPost = writeCells(vectors
       .select(col("vec_id"), col("embedding"),
         nearest(vectors, collectCentroids(cents)).getField("centroid_id").as("centroid_id")),
-      "overwrite", path)
+      "overwrite", s"$path/postings")
     cents.observe(obsC, count(lit(1)).as("n"))
       .write.mode("overwrite").parquet(s"$path/centroids")
     (nPost, obsC.get("n").asInstanceOf[Long])
   }
 
-  /** Write assigned `(vec_id, embedding, centroid_id)` rows under
-    * `path/postings`, partitioned by centroid_id, and return the row
-    * count observed on the write job. Rows are hash-clustered by
-    * centroid first, so each cell is written by exactly one task, as
-    * one file: without it every task writes a sliver into every cell
-    * dir — tasks × cells small files (the classic partitionBy
-    * anti-pattern). The clustering width is explicit — the session's
-    * `spark.sql.shuffle.partitions`, where an unhinted `repartition`
-    * starts — because AQE coalesces by bytes while a partitioned write
-    * costs per file: a few hundred KB of delta would collapse into one
-    * task that writes every touched cell's file in turn. */
-  private def writeCells(assigned: DataFrame, mode: String, path: String): Long = {
+  /** Write rows carrying a `centroid_id` to `dir`, partitioned by
+    * centroid_id, and return the row count observed on the write job —
+    * the one cell writer of the IVF family: [[save]]/[[append]]'s
+    * postings and [[Pq.save]]/[[Pq.append]]'s codes. Rows are
+    * hash-clustered by centroid first, so each cell is written by
+    * exactly one task, as one file: without it every task writes a
+    * sliver into every cell dir — tasks × cells small files (the
+    * classic partitionBy anti-pattern). The clustering width is
+    * explicit — the session's `spark.sql.shuffle.partitions`, where an
+    * unhinted `repartition` starts — because AQE coalesces by bytes
+    * while a partitioned write costs per file: a few hundred KB of
+    * delta would collapse into one task that writes every touched
+    * cell's file in turn. */
+  private[operators] def writeCells(assigned: DataFrame, mode: String, dir: String): Long = {
     val obs = new org.apache.spark.sql.Observation()
     val width = assigned.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     assigned
       .repartition(width, col("centroid_id"))
       .observe(obs, count(lit(1)).as("n"))
-      .write.mode(mode).partitionBy("centroid_id")
-      .parquet(s"$path/postings")
+      .write.mode(mode).partitionBy("centroid_id").parquet(dir)
     obs.get("n").asInstanceOf[Long]
   }
 
@@ -374,10 +366,10 @@ object Ivf {
   def appendWithCounted(cs: graft.functions.CentroidSet, path: String,
                         delta: DataFrame): Long =
     writeCells(delta
-      .where(assignable(modalDim(cs)))
+      .where(assignable(modalDim(cs.mat)))
       .select(col("vec_id"), col("embedding"),
         nearest(delta, cs).getField("centroid_id").as("centroid_id")),
-      "append", path)
+      "append", s"$path/postings")
 
   /** ANN search: probe the `nprobe` nearest centroids to the query, exact
     * dot-product rerank within probed buckets only. `query` is a 1-row
@@ -423,47 +415,69 @@ object Ivf {
   }
 
   /** The cells a single-query search probes: the `nprobe` centroids
-    * nearest `q`, ranked on the driver — shared by [[search]],
-    * [[Pq.searchAdcCells]] and [[Nsw.search]]/[[Nsw.searchFiltered]].
-    * The centroid table (k rows) is collected: no job for the local
-    * relation [[load]] returns, one job for any other frame. Callers
-    * filter by the returned literal ids, which the planner prunes
-    * statically.
+    * nearest `q` ([[rankCells]] over [[collectProbe]]) — shared by
+    * [[search]], [[Pq.searchAdcCells]] and
+    * [[Nsw.search]]/[[Nsw.searchFiltered]]; [[Pq.searchAdcCellsBatch]],
+    * [[Pq.searchResidualCells]] and [[Nsw.searchBatch]] rank through
+    * the same [[rankCells]]. Callers filter by the returned literal
+    * ids, which the planner prunes statically.
     * (A probe subquery would leave pruning to DPP, which does not fire
     * for a literal query frame, so every cell would be read.)
-    *
-    * The ranking is the Spark expression's, bit for bit:
-    * `round(l2sq(c_emb, qv), 6)` — (c − q)² summed left to right in
-    * double, then round6 — ordered by (cdist, centroid_id) with NaN
-    * last and null ids first. Only [[Pq.cleanCentroid]] rows of the
-    * query's own dimension rank; a null-id row takes its slot but
-    * probes nothing (it never joined). Null query elements arrive as
-    * NaN, so every cdist ties and cells go in id order, as Spark's
-    * all-null cdist did. `q = None` (null query) probes nothing.
-    * `nprobe` maps the table's row count — dirty and null-id rows
-    * included, what `cents.count()` returns — to the probe budget. */
+    * `q = None` (null query) probes nothing. `nprobe` maps the table's
+    * row count — dirty and null-id rows included, what `cents.count()`
+    * returns — to the probe budget. */
   private[graft] def probeCells(cents: DataFrame, q: Option[Array[Double]],
                                 nprobe: Long => Int): Seq[Long] = {
-    val rows = cents.select(col("centroid_id").cast("long"), col("c_emb")).collect()
-    val budget = nprobe(rows.length.toLong)
-    q.toSeq.flatMap { qv =>
-      rows.iterator
-        .filter(!_.isNullAt(1))
-        .map(r => (Option.unless(r.isNullAt(0))(r.getLong(0)),
-          r.getSeq[Any](1).map(Pq.widen).toArray))
-        .filter { case (_, ce) => ce.length == qv.length && !ce.exists(_.isNaN) }
-        .map { case (id, ce) =>
-          var acc = 0.0
-          var i = 0
-          while (i < ce.length) { val d = ce(i) - qv(i); acc += d * d; i += 1 }
-          (VecUtil.round6(acc), id)
-        }
-        .toSeq
-        .sorted(Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Option[Long]))
-        .take(budget)
-        .flatMap(_._2)
-    }
+    val (n, cells) = collectProbe(cents)
+    val budget = nprobe(n)
+    q.toSeq.flatMap(rankCells(cells, _, budget).map(_._1))
   }
+
+  /** The centroid table collected once for [[rankCells]]: its row count
+    * (every row) and the rows that can rank — (id, vector widened to
+    * doubles), null embeddings and NaN or null elements dropped. A
+    * null id is kept: it takes a probe slot. No job for the local
+    * relation [[load]] returns, one job for any other frame; the
+    * batched driver-side probes ([[Pq.searchAdcCellsBatch]],
+    * [[Nsw.searchBatch]]) collect once and rank every query. */
+  private[operators] def collectProbe(
+      cents: DataFrame): (Long, Array[(Option[Long], Array[Double])]) = {
+    val rows = cents.select(col("centroid_id").cast("long"), col("c_emb")).collect()
+    (rows.length.toLong, rows.iterator
+      .filter(!_.isNullAt(1))
+      .map(r => (Option.unless(r.isNullAt(0))(r.getLong(0)),
+        r.getSeq[Any](1).map(Pq.widen).toArray))
+      .filterNot(_._2.exists(_.isNaN))
+      .toArray)
+  }
+
+  /** The driver-side centroid ranking of the IVF family: the `budget`
+    * collected cells nearest `q`, nearest first, as (id, vector) — the
+    * vector is what [[Pq.searchResidualCells]] subtracts.
+    *
+    * The ranking is the Spark expression's ([[searchBatch]],
+    * [[Knn.maxSimIvf]]), bit for bit: `round(l2sq(c_emb, qv), 6)` —
+    * (c − q)² summed left to right in double, then round6 — ordered by
+    * (cdist, centroid_id) with NaN last and null ids first. Only
+    * [[Pq.cleanCentroid]] rows of the query's own dimension rank; a
+    * null-id row takes its slot but probes nothing (it never joined).
+    * Null query elements arrive as NaN, so every cdist ties and cells
+    * go in id order, as Spark's all-null cdist did. */
+  private[operators] def rankCells(cells: Array[(Option[Long], Array[Double])],
+                                   q: Array[Double], budget: Int): Seq[(Long, Array[Double])] =
+    cells.iterator
+      .filter(_._2.length == q.length)
+      .map { case (id, ce) =>
+        var acc = 0.0
+        var i = 0
+        while (i < ce.length) { val d = ce(i) - q(i); acc += d * d; i += 1 }
+        (VecUtil.round6(acc), id, ce)
+      }
+      .toSeq
+      .sortBy(t => (t._1, t._2))(
+        Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Option[Long]))
+      .take(budget)
+      .collect { case (_, Some(id), ce) => (id, ce) }
 
   /** Batched ANN search: many query vectors at once — the cluster
     * shape for offline inference (per-query driver loops don't scale;
@@ -508,7 +522,7 @@ object Ivf {
     // reaches it) — count cells under the unified [[Pq.cleanCentroid]]
     // rule, driver-side over the already-bounded collected set
     val cs = collectCentroids(cents)
-    val dim = modalDim(cs)
+    val dim = modalDim(cs.mat)
     val nCells = cs.mat.count(v => v.length == dim && !v.exists(_.isNaN))
     val perCell = assign(vectors, cents)
       .where(col("centroid_id").isNotNull)
@@ -932,7 +946,7 @@ object Ivf {
         "kmeans_par" -> kmeansParallelInit(v, k)).map { case (method, init) =>
         val refined = refineCentroids(v, init, lloydIters)
         val cs = collectCentroids(refined)
-        val a = v.where(assignable(modalDim(cs)))
+        val a = v.where(assignable(modalDim(cs.mat)))
           .select(nearest(v, cs).as("dc"))
           .select(col("dc.centroid_id").as("cid"), col("dc.dist").as("d"))
         val cells = a.groupBy("cid").agg(count(lit(1)).as("c"), sum(col("d")).as("sd"))

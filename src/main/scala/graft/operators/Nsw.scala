@@ -405,47 +405,36 @@ object Nsw {
     * [[Bq.searchBatch]]: ONE plan answers the whole query table, no
     * per-query driver loop. Queries are a bounded panel (the q67
     * class), so they collect once and ride to the probed cells as a
-    * broadcast routing map (cell → queries probing it, built with the
-    * same (cdist, centroid_id) rule as [[search]]); each probed cell
-    * walks every query routed to it in one `flatMapGroups` pass over
-    * the cell's rows (the graph loads ONCE per cell regardless of how
-    * many queries probe it — the batching win), and a GroupedTopK heap
-    * takes per-query top-k without a sort. Exact-mode equivalence with
-    * per-query [[search]] is pinned by NswSpec. */
+    * broadcast routing map (cell → queries probing it: the centroid
+    * table collects once and each query ranks it with
+    * [[Ivf.rankCells]], so it probes exactly the cells [[search]]
+    * would); each probed cell walks every query routed to it in one
+    * `flatMapGroups` pass over the cell's rows (the graph loads ONCE
+    * per cell regardless of how many queries probe it — the batching
+    * win), and a GroupedTopK heap takes per-query top-k without a
+    * sort. Exact-mode equivalence with per-query [[search]] is pinned
+    * by NswSpec. */
   def searchBatch(graph: DataFrame, cents: DataFrame, queries: DataFrame,
                   nprobe: Int, k: Int, ef: Int = 64): DataFrame = {
     val spark = graph.sparkSession
     import spark.implicits._
-    val cs = Ivf.collectCentroids(cents)
-    // Bounded panel collect (documented class): route each query to
-    // its nprobe nearest clean centroids with the search() rule.
+    val (_, cells) = Ivf.collectProbe(cents)
+    // Bounded panel collect (documented class): each query walks as
+    // floats, as in search(), and probes with its own values widened
+    // to doubles, as search()'s Ivf.collectQv does.
     val qRows = queries.select(col("query_id").cast("long"),
-        col("qv").cast("array<float>"))
+        col("qv").cast("array<float>"), col("qv"))
       .collect()
       .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray,
+        r.getSeq[Any](2).map(Pq.widen).toArray))
       .sortBy(_._1)
-    val routing: Map[Long, Array[(Long, Array[Float])]] = {
-      val pairs = for {
-        (qid, qv) <- qRows.toSeq
-        cid <- cs.cids.indices.iterator
-          .filter(j => cs.mat(j).length == qv.length)
-          .map { j =>
-            val emb = cs.mat(j)
-            var acc = 0.0
-            var i = 0
-            while (i < qv.length) {
-              val dlt = qv(i).toDouble - emb(i); acc += dlt * dlt; i += 1
-            }
-            (BigDecimal(acc).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
-              cs.cids(j))
-          }
-          .toSeq.sorted.take(nprobe).map(_._2)
-      } yield (cid, (qid, qv))
-      pairs.groupBy(_._1).map { case (c, qs) =>
-        c -> qs.map(_._2).sortBy(_._1).toArray
-      }
-    }
+    val routing: Map[Long, Array[(Long, Array[Float])]] =
+      qRows.toSeq
+        .flatMap { case (qid, qf, qd) =>
+          Ivf.rankCells(cells, qd, nprobe).map { case (cid, _) => (cid, (qid, qf)) }
+        }
+        .groupBy(_._1).map { case (c, qs) => c -> qs.map(_._2).sortBy(_._1).toArray }
     val routingB = spark.sparkContext.broadcast(routing)
     val efEff = math.max(ef, k)
     val probedCells = routing.keySet.toSeq.sorted

@@ -56,29 +56,31 @@ object Pq {
       // drop the whole row so both sides agree.
       .filter(r => !r.getSeq[Any](1).contains(null))
       .sortBy(_.getLong(0))
-      .map(r => r.getLong(0) -> r.getSeq[Any](1).map(widen).toArray)
-    // Modal (most common) dimension, smallest-dim tie-break — a single
-    // off-dim first stride vector must not redefine the reference dim
-    // and silently discard every normal-dim codebook row.
-    val dim =
-      if (rows.isEmpty) m
-      else rows.groupBy(_._2.length).maxBy { case (len, g) => (g.length, -len) }._1
-    require(dim % m == 0, s"embedding dim $dim not divisible by $m subspaces")
+      .map(_.getSeq[Any](1).map(widen).toArray)
+    sliceCodebooks(rows, m)
+  }
+
+  /** `m` per-subspace codebooks over collected source rows (in code
+    * order): rows of the modal dimension ([[Ivf.modalDim]] — a single
+    * off-dim first row must not redefine it and silently discard every
+    * normal-dim row) cut into `dim/m` slices; other rows are dropped.
+    *
+    * Code ids are the codebook INDEX (0..k-1 in row order) — the
+    * standard PQ contract, NOT the raw vec_id/step. On the oracle
+    * corpus the two coincide (stride ids are contiguous from 0), but
+    * under arbitrary vec_ids (key-shifted copies, sharded lakes) raw
+    * ids are sparse and anything that densifies by code — the ADC
+    * lookup tables — would allocate max(id) slots: the sf1 corpus's
+    * 1e8-shifted ids turned 800-entry tables into 2.3 GB of arrays
+    * and OOMed the driver. Rank codes keep every table exactly k. */
+  private def sliceCodebooks(rows: Array[Array[Double]], m: Int): Seq[CentroidSet] = {
+    val dim = if (rows.isEmpty) m else Ivf.modalDim(rows)
+    require(dim % m == 0, s"dim $dim not divisible by $m subspaces")
     val sub = dim / m
-    val uniform = rows.filter(_._2.length == dim)
-    // Code ids are the codebook INDEX (0..k-1 in stride order) — the
-    // standard PQ contract, NOT the raw vec_id/step. On the oracle
-    // corpus the two coincide (stride ids are contiguous from 0), but
-    // under arbitrary vec_ids (key-shifted copies, sharded lakes) raw
-    // ids are sparse and anything that densifies by code — the ADC
-    // lookup tables — would allocate max(id) slots: the sf1 corpus's
-    // 1e8-shifted ids turned 800-entry tables into 2.3 GB of arrays
-    // and OOMed the driver. Rank codes keep every table exactly k.
+    val uniform = rows.filter(_.length == dim)
     val ranks = uniform.indices.map(_.toLong).toArray
     (0 until m).map { j =>
-      CentroidSet(
-        ranks,
-        uniform.map { case (_, v) => java.util.Arrays.copyOfRange(v, j * sub, (j + 1) * sub) })
+      CentroidSet(ranks, uniform.map(v => java.util.Arrays.copyOfRange(v, j * sub, (j + 1) * sub)))
     }
   }
 
@@ -322,20 +324,38 @@ object Pq {
       .write.mode("overwrite").parquet(s"$path/codebooks")
   }
 
-  /** Persist the IVF-PQ index: the codes table partitioned by coarse
-    * cell (so a probed search is a partition-pruned scan of the 32×
-    * compressed representation) + the centroid and flattened codebook
-    * tables — everything a reader needs to run [[searchAdcCells]]
-    * without the source vectors. */
+  /** The IVF-PQ layout under `path`, written by [[save]],
+    * [[saveResidual]] and [[saveRotated]]: the codes partitioned by
+    * cell through [[Ivf.writeCells]] (one file per cell, written at
+    * `spark.sql.shuffle.partitions` width), then the centroid and
+    * flattened codebook tables, then the rotation — or, for an
+    * unrotated layout, the removal of any earlier `rotation/`, which
+    * would otherwise make [[loadRotation]] and [[append]] rotate with a
+    * matrix these codebooks were never trained in. */
+  private def writeLayout(codes: DataFrame, cents: DataFrame, cbs: Seq[CentroidSet],
+                          rotation: Option[Seq[Array[Double]]], path: String): Unit = {
+    val spark = codes.sparkSession
+    Ivf.writeCells(codes, "overwrite", s"$path/codes")
+    cents.write.mode("overwrite").parquet(s"$path/centroids")
+    writeCodebooks(spark, cbs, path)
+    rotation match {
+      case Some(rows) => writeRotation(spark, rows, path)
+      case None =>
+        val r = new org.apache.hadoop.fs.Path(s"$path/rotation")
+        r.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(r, true)
+    }
+  }
+
+  /** Persist the IVF-PQ index ([[writeLayout]]): the codes table
+    * partitioned by coarse cell (so a probed search is a
+    * partition-pruned scan of the 32× compressed representation) + the
+    * centroid and flattened codebook tables — everything a reader needs
+    * to run [[searchAdcCells]] without the source vectors. Re-saving
+    * over a [[saveRotated]] path removes its rotation. */
   def save(vectors: DataFrame, step: Int, cbs: Seq[CentroidSet],
            path: String): Unit = {
     val cents = Ivf.centroids(vectors, step)
-    encodeWithCell(vectors, cents, cbs)
-      .repartition(col("centroid_id")) // one file per cell dir, not tasks×cells
-      .write.mode("overwrite").partitionBy("centroid_id")
-      .parquet(s"$path/codes")
-    cents.write.mode("overwrite").parquet(s"$path/centroids")
-    writeCodebooks(vectors.sparkSession, cbs, path)
+    writeLayout(encodeWithCell(vectors, cents, cbs), cents, cbs, None, path)
   }
 
   /** Persist a RESIDUAL IVF-PQ index — same on-disk layout as [[save]]
@@ -349,12 +369,7 @@ object Pq {
                    path: String): Seq[CentroidSet] = {
     val cents = Ivf.centroids(vectors, step)
     val cbs = residualCodebooks(vectors, cents, step, offset, m)
-    encodeResidual(vectors, cents, cbs)
-      .repartition(col("centroid_id"))
-      .write.mode("overwrite").partitionBy("centroid_id")
-      .parquet(s"$path/codes")
-    cents.write.mode("overwrite").parquet(s"$path/centroids")
-    writeCodebooks(vectors.sparkSession, cbs, path)
+    writeLayout(encodeResidual(vectors, cents, cbs), cents, cbs, None, path)
     cbs
   }
 
@@ -367,7 +382,9 @@ object Pq {
     * ([[saveRotated]]), the delta rotates through the same R first, so
     * readers keep rotating queries exactly as before. Work is O(delta):
     * one narrow argmin+encode pass and a partition append — resident
-    * code files are never rewritten, and searches prune to probed cells
+    * code files are never rewritten (nor read: only the centroid,
+    * codebook and rotation tables load), each touched cell gains one
+    * file ([[Ivf.writeCells]]), and searches prune to probed cells
     * exactly as before. Frozen quantizers are the standard IVF-PQ
     * maintenance trade (recall drifts as the corpus drifts, until a
     * periodic re-train = re-run [[save]]/[[saveRotated]]).
@@ -378,18 +395,27 @@ object Pq {
     * resident codes would turn O(delta) maintenance into O(index)). */
   def append(spark: org.apache.spark.sql.SparkSession, path: String,
              delta: DataFrame): Unit = {
-    val (_, cents, cbs) = load(spark, path)
+    val cbs = loadCodebooks(spark, path)
     val in = loadRotation(spark, path)
       .map(rows => rotateWith(delta, rows)).getOrElse(delta)
-    encodeWithCell(in, cents, cbs)
-      .repartition(col("centroid_id"))
-      .write.mode("append").partitionBy("centroid_id")
-      .parquet(s"$path/codes")
+    Ivf.writeCells(encodeWithCell(in, Ivf.loadCentroids(spark, path), cbs),
+      "append", s"$path/codes")
   }
 
-  /** Load a persisted IVF-PQ index: (codes, centroids, codebooks). */
+  /** Load a persisted IVF-PQ index: (codes, centroids, codebooks) — the
+    * [[Ivf.load]] contract on the codes layout. The codes are listed on
+    * the driver ([[SqlBridge.listedParquet]]: no listing job past 32
+    * cell directories) and the centroid table is a local relation
+    * ([[Ivf.loadCentroids]]), so a literal [[searchAdcCells]] over the
+    * loaded index runs one job. */
   def load(spark: org.apache.spark.sql.SparkSession,
            path: String): (DataFrame, DataFrame, Seq[CentroidSet]) = {
+    val cbs = loadCodebooks(spark, path)
+    (SqlBridge.listedParquet(spark, s"$path/codes"), Ivf.loadCentroids(spark, path), cbs)
+  }
+
+  private def loadCodebooks(spark: org.apache.spark.sql.SparkSession,
+                            path: String): Seq[CentroidSet] = {
     val cbRows = spark.read.parquet(s"$path/codebooks")
       .select(col("subspace"), col("code"), col("sub_emb"))
       .collect()
@@ -398,12 +424,10 @@ object Pq {
     require(cbRows.keySet == (0 until cbRows.size).toSet,
       s"persisted codebooks missing subspaces: have ${cbRows.keySet.toSeq.sorted}, " +
         s"want 0..${cbRows.size - 1}")
-    val cbs = (0 until cbRows.size).map { j =>
+    (0 until cbRows.size).map { j =>
       val rows = cbRows(j).sortBy(_._2)
       CentroidSet(rows.map(_._2), rows.map(_._3))
     }
-    (spark.read.parquet(s"$path/codes"),
-      spark.read.parquet(s"$path/centroids"), cbs)
   }
 
   /** ADC search over probed cells only — the composed IVF×PQ search:
@@ -431,38 +455,29 @@ object Pq {
   /** Batched PROBED search: a whole query table over the partitioned
     * codes, each query ADC-reranking only its own nprobe cells — the
     * billion-scale serving shape ([[Ivf.searchBatch]]'s contract on the
-    * compressed layout). Probing and dist tables compute driver-side
-    * per query (bounded: queries × centroids, the same contract as
-    * [[searchResidualCells]]); the (query_id, centroid_id) probe pairs
-    * broadcast-join the codes — each code row fans out ONLY to the
-    * queries probing its cell — and the per-query dist tables join by
-    * query_id. Per-query top-k through GroupedTopK: bounded heaps, no
+    * compressed layout). The centroid table collects once and each
+    * query ranks it with [[Ivf.rankCells]], the ranking
+    * [[searchAdcCells]] probes with, so every query probes the cells
+    * its single-query search would; dist tables compute driver-side
+    * per query (bounded: queries × centroids). The (query_id,
+    * centroid_id) probe pairs broadcast-join the codes — each code row
+    * fans out ONLY to the queries probing its cell — and the per-query
+    * dist tables join by query_id. Per-query top-k through GroupedTopK: bounded heaps, no
     * sort. On the [[save]] layout the probe join prunes the codes scan
     * to the UNION of probed cells. */
   def searchAdcCellsBatch(codes: DataFrame, cents: DataFrame, cbs: Seq[CentroidSet],
                           queries: DataFrame, nprobe: Int, k: Int): DataFrame = {
     val spark = codes.sparkSession
     import spark.implicits._
-    val cs = Ivf.collectCentroids(cents)
-    val dim = subDim(cbs) * cbs.length
-    // driver-side form of the unified [[cleanCentroid]] rule:
-    // collectCentroids widened null elements to NaN, so one isNaN test
-    // covers both the null-element and NaN-element legs
-    val clean = cs.cids.zip(cs.mat)
-      .filter { case (_, ce) => ce.length == dim && !ce.exists(_.isNaN) }
+    val (_, cells) = Ivf.collectProbe(cents)
     // same collected-query guard as [[searchAdcBatch]] (r8 advice)
     val qs = queries
-      .where(col("query_id").isNotNull && cleanVec(col("qv"), dim))
+      .where(col("query_id").isNotNull && cleanVec(col("qv"), subDim(cbs) * cbs.length))
       .select(col("query_id").cast("long"), col("qv")).collect()
       .map(r => (r.getLong(0), r.getSeq[Any](1).map(widen).toArray))
     val probed = qs.toSeq.flatMap { case (qid, qv) =>
-      clean.map { case (cid, ce) =>
-        var acc = 0.0
-        var i = 0
-        while (i < dim) { val d = qv(i) - ce(i); acc += d * d; i += 1 }
-        (qid, cid, graft.functions.VecUtil.round6(acc))
-      }.sortBy { case (_, cid, d) => (d, cid) }.take(nprobe)
-    }.map { case (qid, cid, _) => (qid, cid) }.toDF("query_id", "centroid_id")
+      Ivf.rankCells(cells, qv, nprobe).map { case (cid, _) => (qid, cid) }
+    }.toDF("query_id", "centroid_id")
     val qdt = qs.toSeq
       .map { case (qid, qv) => (qid, distTables(cbs, qv).map(_.toSeq)) }
       .toDF("query_id", "dts")
@@ -811,20 +826,16 @@ object Pq {
                   path: String): Seq[CentroidSet] = {
     val rot = rotateWith(vectors, model.rows)
     val cents = Ivf.centroids(rot, step)
-    encodeWithCell(rot, cents, model.codebooks)
-      .repartition(col("centroid_id"))
-      .write.mode("overwrite").partitionBy("centroid_id")
-      .parquet(s"$path/codes")
-    cents.write.mode("overwrite").parquet(s"$path/centroids")
-    writeCodebooks(vectors.sparkSession, model.codebooks, path)
-    writeRotation(vectors.sparkSession, model.rows, path)
+    writeLayout(encodeWithCell(rot, cents, model.codebooks), cents, model.codebooks,
+      Some(model.rows), path)
     model.codebooks
   }
 
   /** The rotation matrix persisted by [[saveRotated]], row-major —
-    * `None` when the index was written without one ([[save]] /
-    * [[saveResidual]] layouts), so readers can dispatch on the layout:
-    * rotate the query iff the index is rotated. */
+    * `None` when the index was last written without one ([[save]] /
+    * [[saveResidual]] remove an earlier rotation, see [[writeLayout]]),
+    * so readers can dispatch on the layout: rotate the query iff the
+    * index is rotated. */
   def loadRotation(spark: org.apache.spark.sql.SparkSession,
                    path: String): Option[Seq[Array[Double]]] =
     try {
@@ -890,17 +901,7 @@ object Pq {
       .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
       .sortBy(_.getLong(0))
       .map(_.getSeq[Any](1).map(widen).toArray)
-    val dim =
-      if (rows.isEmpty) m
-      else rows.groupBy(_.length).maxBy { case (len, g) => (g.length, -len) }._1
-    require(dim % m == 0, s"residual dim $dim not divisible by $m subspaces")
-    val sub = dim / m
-    val uniform = rows.filter(_.length == dim)
-    (0 until m).map { j =>
-      CentroidSet(
-        uniform.indices.map(_.toLong).toArray,
-        uniform.map(v => java.util.Arrays.copyOfRange(v, j * sub, (j + 1) * sub)))
-    }
+    sliceCodebooks(rows, m)
   }
 
   /** Residual PQ encode: vec_id, centroid_id, c0…c{m-1} where each code
@@ -925,30 +926,17 @@ object Pq {
     * from the PER-CELL residual query q − centroid (that is the point of
     * residual PQ — the tables change per probed cell), so the scan-side
     * distance is a `centroid_id`-dispatched table sum: nprobe × m
-    * literal-array lookups, still inside whole-stage codegen. Probing
-    * runs driver-side over the collected centroid set — the same
-    * contractually-bounded work as [[distTables]] per query — with the
-    * oracle's exact ranking: (round6(l2sq), centroid_id) ascending,
-    * dirty/off-dim centroids excluded ([[cleanVec]] semantics). */
+    * literal-array lookups, still inside whole-stage codegen. The probe
+    * is [[Ivf.rankCells]] — the cells [[Ivf.probeCells]] returns, with
+    * the centroid vectors the residual query subtracts. */
   def searchResidualCells(codes: DataFrame, cents: DataFrame, cbs: Seq[CentroidSet],
                           query: DataFrame, nprobe: Int, k: Int): DataFrame = {
     val spark = codes.sparkSession
     import spark.implicits._
     val q = collectQuery(query)
-    val cs = Ivf.collectCentroids(cents)
-    val dim = subDim(cbs) * cbs.length
-    val probed = cs.cids.zip(cs.mat)
-      .filter { case (_, ce) => ce.length == dim && !ce.exists(_.isNaN) }
-      .map { case (cid, ce) =>
-        var acc = 0.0
-        var i = 0
-        while (i < dim) { val d = q(i) - ce(i); acc += d * d; i += 1 }
-        (cid, graft.functions.VecUtil.round6(acc), ce)
-      }
-      .sortBy { case (cid, d, _) => (d, cid) }
-      .take(nprobe)
-    val dist = probed.foldLeft(lit(null).cast("double")) { case (acc, (cid, _, ce)) =>
-      val qr = Array.tabulate(dim)(i => q(i) - ce(i))
+    val probed = Ivf.rankCells(Ivf.collectProbe(cents)._2, q, nprobe)
+    val dist = probed.foldLeft(lit(null).cast("double")) { case (acc, (cid, ce)) =>
+      val qr = Array.tabulate(q.length)(i => q(i) - ce(i))
       when(col("centroid_id") === cid, adcDist(distTables(cbs, qr))).otherwise(acc)
     }
     val probedDf = probed.map(_._1).toSeq.toDF("centroid_id")

@@ -110,6 +110,7 @@ class GraphSpec extends SparkSpec {
       ("connectedComponents", 1, () => Clusters.connectedComponents(
         edges.select(col("src").as("a"), col("dst").as("b"))).count()),
       ("coreDecomposition", 1, () => Graph.coreDecomposition(edges).count()),
+      ("neighborhoodLevels depth 3", 3, () => Graph.neighborhoodLevels(edges, 3).count()),
       ("hitsAuthorities", 1, () => Graph.supplierAuthorities(li,
         Tables.orders(spark, sf0001), 3, 20).count()),
       ("BpeTrain.train", 0, () => BpeTrain.train(docs, 24).count()),

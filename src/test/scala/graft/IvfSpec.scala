@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.sum
 import org.apache.spark.sql.types._
-import graft.operators.{Ivf, Knn}
+import graft.operators.{Ivf, Knn, Nsw, Pq}
 
 object IvfSpec {
   import org.apache.spark.sql.functions._
@@ -48,6 +48,70 @@ object IvfSpec {
       new java.io.File(s"$root/centroid_id=$id").listFiles().count(_.getName.endsWith(".parquet"))
     }.sum
     (scans.head.metrics("numFiles").value, probed)
+  }
+
+  /** A dirty centroid table beside the sf0.001 stride centroids, with
+    * the queries every probe path must rank it for. Rows: the clean
+    * centroids except id 1 (null element), 2 (off-dim), 3 (NaN element)
+    * and 4 (null embedding); two null-id rows (one the nearest of all,
+    * one mid-rank); id 1000, an exact tie with cell 5; and −id6, a
+    * round6 tie with cell 6 under a lower id. `rows` is the table's
+    * row count, `nClean` the rows that can rank. */
+  final case class DirtyPanel(cents: DataFrame, rows: Int, nClean: Int,
+                              queries: Seq[(String, DataFrame)]) {
+    def budgets: Seq[Int] = Seq(1, 3, nClean - 1, nClean, rows + 2)
+  }
+
+  object DirtyPanel {
+    def apply(spark: SparkSession, emb: DataFrame): DirtyPanel = {
+      import SparkEntry.Params.{IvfStep, QueryVecId}
+      val clean = Ivf.centroids(emb, IvfStep).orderBy("centroid_id").collect()
+        .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
+      val q0 = emb.where(col("vec_id") === QueryVecId).select("embedding")
+        .head().getSeq[Float](0).toArray
+      def boxed(v: Array[Float]): Seq[java.lang.Float] = v.toSeq.map(Float.box)
+      def withElem(v: Array[Float], i: Int, x: java.lang.Float) = boxed(v).updated(i, x)
+      // centroid 6 moved one float ulp away from the query, under a lower
+      // id: its raw distance is larger, its round6 distance (almost
+      // surely) ties, so only the (cdist, centroid_id) order puts it first
+      val (id6, c6) = clean(6)
+      val nudged = c6.clone()
+      nudged(0) = if (c6(0) >= q0(0)) Math.nextUp(c6(0)) else Math.nextDown(c6(0))
+      val rows: Seq[(java.lang.Long, Seq[java.lang.Float])] =
+        clean.toSeq.map { case (id, v) =>
+          val e = id match {
+            case 1L => withElem(v, 3, null)                          // null element
+            case 2L => boxed(v.take(8))                              // off-dim
+            case 3L => withElem(v, 3, Float.NaN)                     // NaN element
+            case 4L => null                                          // null embedding
+            case _ => boxed(v)
+          }
+          (Long.box(id), e)
+        } ++ Seq(
+          (null, boxed(q0)),                        // null id, nearest of all
+          (null, boxed(clean(9)._2)),               // null id, mid-rank
+          (Long.box(1000L), boxed(clean(5)._2)),    // exact tie with cell 5
+          (Long.box(-id6), boxed(nudged)))          // round6 tie with cell 6
+      val schema = StructType(Seq(
+        StructField("centroid_id", LongType, nullable = true),
+        StructField("c_emb", ArrayType(FloatType, containsNull = true), nullable = true)))
+      val cents = spark.createDataFrame(
+        java.util.Arrays.asList(rows.map { case (id, e) => Row(id, e) }: _*), schema)
+      val qSchema = StructType(Seq(StructField("qv", ArrayType(FloatType, containsNull = true))))
+      def query(v: Seq[java.lang.Float]) =
+        spark.createDataFrame(java.util.List.of(Row(v)), qSchema)
+      val queries = Seq(
+        "clean" -> query(boxed(q0)),
+        "clean double" -> query(boxed(q0)).select(col("qv").cast("array<double>").as("qv")),
+        "scanned" -> Knn.queryVector(emb, QueryVecId),
+        "null element" -> query(withElem(q0, 5, null)),
+        "NaN element" -> query(withElem(q0, 5, Float.NaN)),
+        "wrong dim" -> query(boxed(q0.take(8))),
+        "null vector" -> query(null))
+      val nClean = rows.count { case (_, e) =>
+        e != null && e.length == q0.length && !e.exists(x => x == null || x.isNaN) }
+      DirtyPanel(cents, rows.size, nClean, queries)
+    }
   }
 
   /** `n` deterministic 8-dim vectors with ids `from until from + n`. */
@@ -325,72 +389,65 @@ class IvfSpec extends SparkSpec {
 
   test("driver probe == Spark-expression probe on dirty centroids and dirty queries; " +
     "search top-k unchanged bit for bit") {
-    import org.apache.spark.sql.functions.col
     val emb = Tables.embeddings(spark, sf0001)
-    val clean = Ivf.centroids(emb, IvfStep).orderBy("centroid_id").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
     val postings = Ivf.assign(emb, Ivf.centroids(emb, IvfStep))
       .join(emb.select("vec_id", "embedding"), "vec_id")
-    val q0 = emb.where(col("vec_id") === QueryVecId).select("embedding")
-      .head().getSeq[Float](0).toArray
-    def boxed(v: Array[Float]): Seq[java.lang.Float] = v.toSeq.map(Float.box)
-    def withElem(v: Array[Float], i: Int, x: java.lang.Float) = boxed(v).updated(i, x)
-    // centroid 6 moved one float ulp away from the query, under a lower
-    // id: its raw distance is larger, its round6 distance (almost
-    // surely) ties, so only the (cdist, centroid_id) order puts it first
-    val (id6, c6) = clean(6)
-    val nudged = c6.clone()
-    nudged(0) = if (c6(0) >= q0(0)) Math.nextUp(c6(0)) else Math.nextDown(c6(0))
-    val rows: Seq[(java.lang.Long, Seq[java.lang.Float])] =
-      clean.toSeq.map { case (id, v) =>
-        val e = id match {
-          case 1L => withElem(v, 3, null)                          // null element
-          case 2L => boxed(v.take(8))                              // off-dim
-          case 3L => withElem(v, 3, Float.NaN)                     // NaN element
-          case 4L => null                                          // null embedding
-          case _ => boxed(v)
-        }
-        (Long.box(id), e)
-      } ++ Seq(
-        (null, boxed(q0)),                        // null id, nearest of all
-        (null, boxed(clean(9)._2)),               // null id, mid-rank
-        (Long.box(1000L), boxed(clean(5)._2)),    // exact tie with cell 5
-        (Long.box(-id6), boxed(nudged)))          // round6 tie with cell 6
-    val schema = StructType(Seq(
-      StructField("centroid_id", LongType, nullable = true),
-      StructField("c_emb", ArrayType(FloatType, containsNull = true), nullable = true)))
-    val dirty = spark.createDataFrame(
-      java.util.Arrays.asList(rows.map { case (id, e) => Row(id, e) }: _*), schema)
-    val qSchema = StructType(Seq(StructField("qv", ArrayType(FloatType, containsNull = true))))
-    def query(v: Seq[java.lang.Float]) =
-      spark.createDataFrame(java.util.List.of(Row(v)), qSchema)
-    val queries = Seq(
-      "clean" -> query(boxed(q0)),
-      "clean double" -> query(boxed(q0)).select(col("qv").cast("array<double>").as("qv")),
-      "scanned" -> Knn.queryVector(emb, QueryVecId),
-      "null element" -> query(withElem(q0, 5, null)),
-      "NaN element" -> query(withElem(q0, 5, Float.NaN)),
-      "wrong dim" -> query(boxed(q0.take(8))),
-      "null vector" -> query(null))
-    val nClean = rows.count { case (_, e) =>
-      e != null && e.length == q0.length && !e.exists(x => x == null || x.isNaN) }
-    val budgets = Seq(1, 3, nClean - 1, nClean, rows.size + 2)
-    queries.foreach { case (name, q) =>
+    val panel = IvfSpec.DirtyPanel(spark, emb)
+    panel.queries.foreach { case (name, q) =>
       val qv = Ivf.collectQv(q)._2
-      budgets.foreach { np =>
-        val want = IvfSpec.exprProbe(dirty, q, np).flatMap(Option(_)).map(_.longValue)
-        assert(Ivf.probeCells(dirty, qv, _ => np) == want, s"$name query, nprobe $np")
+      panel.budgets.foreach { np =>
+        val want = IvfSpec.exprProbe(panel.cents, q, np).flatMap(Option(_)).map(_.longValue)
+        assert(Ivf.probeCells(panel.cents, qv, _ => np) == want, s"$name query, nprobe $np")
       }
-      Seq(3, rows.size + 2).foreach { np =>
-        assert(Ivf.search(postings, dirty, q, np, K).collect().toSeq ==
-          IvfSpec.exprSearch(postings, dirty, q, np, K).collect().toSeq,
+      Seq(3, panel.rows + 2).foreach { np =>
+        assert(Ivf.search(postings, panel.cents, q, np, K).collect().toSeq ==
+          IvfSpec.exprSearch(postings, panel.cents, q, np, K).collect().toSeq,
           s"$name query, nprobe $np: search diverged from the expression formulation")
       }
     }
     // the k overload's budget counts every row, dirty and null-id included
-    val q = queries.head._2
-    assert(Ivf.search(postings, dirty, q, K).collect().toSeq ==
-      IvfSpec.exprSearch(postings, dirty, q, Ivf.autoNProbe(rows.size), K).collect().toSeq)
+    val q = panel.queries.head._2
+    assert(Ivf.search(postings, panel.cents, q, K).collect().toSeq ==
+      IvfSpec.exprSearch(postings, panel.cents, q, Ivf.autoNProbe(panel.rows), K).collect().toSeq)
+  }
+
+  test("the IVF family probes as probeCells on the dirty-centroid panel: batched " +
+    "Pq/Nsw == their single-query search, residual PQ reads the probed cells") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val emb = Tables.embeddings(spark, sf0001)
+    val cents = Ivf.centroids(emb, IvfStep)
+    val cbs = Pq.codebooks(emb, IvfStep, PqM)
+    val codes = Pq.encodeWithCell(emb, cents, cbs)
+    val graph = Nsw.build(emb, IvfStep)
+    val panel = IvfSpec.DirtyPanel(spark, emb)
+    // one residual code row per panel cell, vec_id = its cell: the cells
+    // a residual search reads are the vec_ids it returns
+    val cells = panel.cents.where(col("centroid_id").isNotNull)
+      .select(col("centroid_id").cast("long")).distinct().as[Long].collect().toSeq
+    val rcodes = cells.toDF("centroid_id").select(col("centroid_id").as("vec_id") +:
+      col("centroid_id") +: (0 until PqM).map(j => lit(0L).as(s"c$j")): _*)
+    val rcbs = Pq.residualCodebooks(emb, cents, IvfStep, PqResOffset, PqM)
+    // (vec_id, score bits) from column `at` on: NaN scores compare too
+    def bits(rows: Array[Row], at: Int) =
+      rows.map(r => (r.getLong(at), java.lang.Double.doubleToLongBits(r.getDouble(at + 1)))).toSeq
+    val names = Set("clean", "clean double", "NaN element")
+    panel.queries.filter(nq => names(nq._1)).foreach { case (name, q) =>
+      val qv = Ivf.collectQv(q)._2
+      val batch = q.select(lit(0L).as("query_id"), col("qv"))
+      panel.budgets.foreach { np =>
+        assert(bits(Pq.searchAdcCellsBatch(codes, panel.cents, cbs, batch, np, K).collect(), 1) ==
+          bits(Pq.searchAdcCells(codes, panel.cents, cbs, q, np, K).collect(), 0),
+          s"$name query, nprobe $np: Pq batch != single")
+        assert(bits(Nsw.searchBatch(graph, panel.cents, batch, np, K).collect(), 1) ==
+          bits(Nsw.search(graph, panel.cents, q, np, K).collect(), 0),
+          s"$name query, nprobe $np: Nsw batch != single")
+        val read = Pq.searchResidualCells(rcodes, panel.cents, rcbs, q, np, cells.size)
+          .collect().map(_.getLong(0)).toSet
+        assert(read == Ivf.probeCells(panel.cents, qv, _ => np).toSet,
+          s"$name query, nprobe $np: residual probe != probeCells")
+      }
+    }
   }
 
   test("cellBalance: occupancy invariants on a clean corpus, dirty rows land in the right buckets") {

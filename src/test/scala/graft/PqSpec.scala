@@ -495,6 +495,78 @@ class PqSpec extends SparkSpec {
       "rotated append != fresh rotated encode of the union")
   }
 
+  test("re-saving an unrotated layout over a rotated one removes its rotation") {
+    val path = s"${System.getProperty("java.io.tmpdir")}/graft_pq_resave"
+    val model = Pq.learnRotation(emb0001, sampleStride = 2, m = 8, iters = 1)
+    Pq.saveRotated(emb0001, 25, model, path)
+    assert(Pq.loadRotation(spark, path).isDefined)
+    Pq.save(emb0001, 25, Pq.codebooks(emb0001, step = 25, m = 8), path)
+    assert(Pq.loadRotation(spark, path).isEmpty,
+      "save left saveRotated's rotation: append would rotate with untrained R")
+    Pq.saveRotated(emb0001, 25, model, path)
+    Pq.saveResidual(emb0001, step = 25, offset = 12, m = 8, path)
+    assert(Pq.loadRotation(spark, path).isEmpty, "saveResidual left the rotation")
+  }
+
+  test("save/append write at full width: one new file per touched cell, " +
+    "the code write stage runs spark.sql.shuffle.partitions tasks") {
+    import graft.operators.Ivf
+    import org.apache.spark.sql.graftbridge.JobLog
+    val sc = spark.sparkContext
+    val path = s"${System.getProperty("java.io.tmpdir")}/graft_pq_width"
+    val base = IvfSpec.wave(spark, 0, 400) // 16 cells
+    val delta = IvfSpec.wave(spark, 400, 60)
+    val cbs = Pq.codebooks(base, 25, 2)
+    val touched = Pq.encodeWithCell(delta, Ivf.centroids(base, 25), cbs)
+      .select("centroid_id").distinct()
+      .collect().map(r => s"centroid_id=${r.getLong(0)}").toSet
+    assert(touched.size > 1)
+    def cellFiles(): Map[String, Set[String]] =
+      new java.io.File(s"$path/codes").listFiles().filter(_.isDirectory).map { d =>
+        d.getName -> d.listFiles().map(_.getName).filter(_.endsWith(".parquet")).toSet
+      }.toMap
+    // a width no other job of the save runs at, so the write stage is
+    // the one job that shows it
+    val width = 7
+    val old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", width.toString)
+    try {
+      val (_, saveJobs) = JobLog.during(sc)(Pq.save(base, 25, cbs, path))
+      val saved = cellFiles()
+      assert(saved.size == 16 && saved.values.forall(_.size == 1), s"save wrote $saved")
+      assert(saveJobs.count(_.finalTasks == width) == 1, s"code write not at width: $saveJobs")
+      val (_, appendJobs) = JobLog.during(sc)(Pq.append(spark, path, delta))
+      cellFiles().foreach { case (cell, files) =>
+        val added = (files -- saved.getOrElse(cell, Set.empty)).size
+        assert(added == (if (touched(cell)) 1 else 0), s"$cell gained $added files")
+      }
+      // the code write is the append's last job
+      assert(appendJobs.last.finalTasks == width, s"append not at width: $appendJobs")
+    } finally spark.conf.set("spark.sql.shuffle.partitions", old)
+  }
+
+  test("load of a >32-cell layout runs no listing job; a literal searchAdcCells " +
+    "over it runs one job") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.graftbridge.JobLog
+    import org.apache.spark.sql.types._
+    val sc = spark.sparkContext
+    val path = s"${System.getProperty("java.io.tmpdir")}/graft_pq_load"
+    val vectors = IvfSpec.wave(spark, 0, 2000) // 80 cells
+    Pq.save(vectors, 25, Pq.codebooks(vectors, 25, 2), path)
+    val ((codes, cents, cbs), loadJobs) = JobLog.during(sc)(Pq.load(spark, path))
+    assert(!loadJobs.exists(_.description.startsWith("Listing leaf files")),
+      s"load ran a listing job: $loadJobs")
+    assert(codes.count() == 2000)
+    val v = vectors.where(col("vec_id") === 7L).head().getSeq[Float](1)
+    val q = spark.createDataFrame(java.util.Collections.singletonList(Row(v)),
+      StructType(Seq(StructField("qv", ArrayType(FloatType)))))
+    val (hits, searchJobs) =
+      JobLog.during(sc)(Pq.searchAdcCells(codes, cents, cbs, q, 3, 10).collect())
+    assert(hits.length == 10)
+    assert(searchJobs.size == 1, s"literal search ran ${searchJobs.size} jobs: $searchJobs")
+  }
+
   test("composed serve: excludes filtered/deleted rows; degenerate case == exact filtered top-k") {
     val q = Knn.queryVector(emb0001, 0L)
     val dead = emb0001.where(pmod(col("vec_id"), lit(7L)) === 2L).select("vec_id")
